@@ -24,40 +24,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC like Verify: normalizeEventTs's NTZ->TZ cast is only
-      // value-preserving under UTC, so bench must time the same plans
-      // the correctness gate verified.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE partition-coalescing posture, env-parameterized for cluster
-      // deployments (optimization guide §2.2 "fewer, larger reduce
-      // partitions"): a 100 TB run sets SPARK_GRAFT_PARALLELISM_FIRST=
-      // false + SPARK_GRAFT_ADVISORY_PART_BYTES=268435456 so partition
-      // count derives from data size (the Spark docs' production
-      // recommendation). The LOCAL defaults stay Spark's defaults:
-      // size-based coalescing was MEASURED SLOWER here (ABBA pairs,
-      // r15: pf=false 22-37% worse at 64m/2m/1m advisory — at sf0.1
-      // the parallelism lost on 0.5-20 MB shuffles outweighs the
-      // task-scheduling overhead saved; OPTIMIZATION_r15.md "Measured
-      // and rejected"). Explicit repartition(n, …) calls (zipIndex /
-      // prefixSum pinned exchanges) are untouched by AQE either way,
-      // so partition-id-derived results cannot shift.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PART_BYTES", "67108864"))
-      // generic deployment-conf passthrough ("k=v;k2=v2") so cluster
-      // postures (zstd shuffle codec, shuffled-hash preference, bigger
-      // scan splits — guide §9) are reachable without a code edit, and
-      // config experiments are paired-measurable without recompiling
-      .config(graft.core.EnvConf(sys.env.get("SPARK_GRAFT_CONF")))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.LocalSession("WARN")
     // Host-load stamps make a contended artifact SELF-IDENTIFYING: the
     // round-7 driver bench recorded scan-shaped queries 5-25x their quiet
     // numbers and nothing in the JSON proved the host was loaded — the

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: prints the formatted physical plan (and an optimized
   * logical summary) of one registered query — the iteration loop for
   * checking pushdown (`PushedFilters`), scan pruning (`ReadSchema`),
@@ -13,14 +11,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("vec_cosine_topk")
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.LocalSession("ERROR")
     val df = SparkEntry.queries(name)(spark, sfDir)
     println(s"==== $name: optimized logical plan ====")
     println(df.queryExecution.optimizedPlan.toString.take(8000))

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Batch plan dumper for optimization evidence: writes
   * `.explain("formatted")` output of each named query to
   * `<outDir>/<name>_<tag>.txt` — one JVM for the whole list (the
@@ -21,14 +19,7 @@ object PlanDump {
       if (args(2) == "all") SparkEntry.queries.keys.toSeq.sorted
       else args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val sfDir = args.lift(3).getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.LocalSession("ERROR")
     Files.createDirectories(Paths.get(outDir))
     SparkEntry.prebuildIndexes(spark, sfDir)
     // A fully failing capture run must not exit 0 (CI/scripts would

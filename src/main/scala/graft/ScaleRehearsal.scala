@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** 10× scale rehearsal for the dedup/ANN family — the caps and bucket
@@ -26,24 +26,14 @@ object ScaleRehearsal {
   def main(args: Array[String]): Unit = {
     val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = if (args.length > 1) args(1).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Shuffle partitions scale with the DATA, not the cores — the brief's
     // "size shuffle partitions for the target SF" rule, learned the hard
     // way: at factor 100 the jaccard inverted-index join's per-partition
     // aggregate state outgrew a 32-partition layout's heap (each clone
     // group contributes C(100,2) pair keys), while the same plan at 4×
     // the partitions spills fine. A real cluster sizes this the same way.
-    val shufflePartitions = math.max(cpus.toInt, factor * 4)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      // UTC like Verify/Bench: normalizeEventTs's NTZ->TZ cast is only
-      // value-preserving under UTC.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.LocalSession("WARN",
+      shufflePartitions = math.max(graft.core.LocalSession.cpus, factor * 4))
 
     val work = java.nio.file.Files.createTempDirectory("graft-scale-").toString
     println(s"SCALE synthesizing ${factor}x of $baseDir under $work")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Tripwire audit for single-partition windows: runs every registered
   * query (or a SPARK_GRAFT_ONLY subset) at a small scale factor and
   * attributes each `WindowExec: No Partition Defined` warning to the
@@ -17,15 +15,7 @@ import org.apache.spark.sql.SparkSession
 object WindowAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.LocalSession("ERROR")
 
     // Count "No Partition Defined" events from WindowExec specifically;
     // everything else stays at ERROR so the report is the only output.

@@ -8,7 +8,7 @@ package graft.core
   * recompiling. Malformed entries (no '=') are ignored rather than
   * failing the bench. */
 object EnvConf {
-  /** Determinism pins Bench/Verify set explicitly: a passthrough entry
+  /** Determinism pins [[LocalSession]] sets explicitly: a passthrough entry
     * for one of these would silently override the pin (it is applied
     * AFTER them on the builder) and shift results while the correctness
     * gate still reports green under the same shifted posture — so they
@@ -33,7 +33,7 @@ object EnvConf {
     pinned.keys.foreach { k =>
       System.err.println(
         s"[graft] SPARK_GRAFT_CONF entry '$k' ignored: collides with a " +
-          "pinned determinism config (see Bench.scala)")
+          "pinned determinism config (see LocalSession.scala)")
     }
     ok
   }

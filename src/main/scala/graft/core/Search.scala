@@ -44,33 +44,9 @@ final case class VecStore(
       qs: Seq[Seq[Double]],
       metric: Metric,
       k: Int,
-      roundScoreDecimals: Option[Int] = None): DataFrame = {
-    require(qs.nonEmpty, "query batch must not be empty")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val qdf = qs.zipWithIndex
-      .map { case (q, i) => (i, q, vectors.invNormOf(q)) }
-      .toDF("q_idx", "q_vec", "q_inv")
-    val scored = df.crossJoin(broadcast(qdf))
-      .withColumn("score", vectors.score(metric, col(vecCol), col("q_vec"),
-        invNormCol.map(col), Some(col("q_inv"))))
-    val rounded = roundScoreDecimals match {
-      case Some(d) => scored.withColumn("score", vectors.quantize(col("score"), d))
-      case None    => scored
-    }
-    val scoreOrd = metric.defaultTake match {
-      case TakeType.Max => col("score").desc
-      case TakeType.Min => col("score").asc
-    }
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("q_idx")).orderBy(scoreOrd, col(idCol).asc)
-    rounded
-      .filter(!isnan(col("score")))
-      .withColumn("rk", row_number().over(w))
-      .where(col("rk") <= k)
-      .select((Seq(col("q_idx"), col(idCol), col("score")) ++ metaCols.map(col)): _*)
-      .orderBy(col("q_idx"), scoreOrd, col(idCol))
-  }
+      roundScoreDecimals: Option[Int] = None): DataFrame =
+    SearchPlan(this, qs.map(_.toIndexedSeq).toIndexedSeq, metric, k = Some(k),
+      roundScoreDecimals = roundScoreDecimals).collectPerQuery()
 
   /** Metadata columns in the reference's result order: sorted by name
     * (ref: meta.rs:723-724). Index-internal columns (precomputed norm,
@@ -154,88 +130,123 @@ final case class SearchPlan(
     * there is no other shuffle — top-k is TakeOrderedAndProject
     * (per-partition bounded heap, then a single driver merge of k·P rows).
     */
-  def collect(): DataFrame = {
+  def collect(): DataFrame =
+    if (queries.length == 1) {
+      val q = queries.head
+      scoreTopK(filtered, vectors.vecLit(q), lit(vectors.invNormOf(q)))
+    } else {
+      // Batch: score every (row, query) pair, then ONE global top-k across
+      // all pairs (ref semantics: vec_store_tests.rs:899-924). Not a
+      // per-query window — that would be a different (wrong) result shape.
+      scoreTopK(crossQueries, col("q_vec"), col("q_inv"))
+    }
+
+  /** Per-query form of [[collect]] behind [[VecStore.queryBatchPerQuery]]:
+    * the same rows and scoring, ranked within each `q_idx`. */
+  private[core] def collectPerQuery(): DataFrame =
+    scoreTopK(crossQueries, col("q_vec"), col("q_inv"), Some("q_idx"))
+      .orderBy(col("q_idx"), scoreOrder, col(store.idCol))
+
+  private def filtered: DataFrame =
+    metaPred.map(store.df.filter).getOrElse(store.df)
+
+  /** Store rows crossed with the broadcast query table
+    * `(q_idx, q_vec, q_inv)`, query inverse norms precomputed on the
+    * driver. */
+  private def crossQueries: DataFrame = {
+    val spark = store.df.sparkSession
+    import spark.implicits._
+    val qdf = queries.zipWithIndex
+      .map { case (q, i) => (i, q, vectors.invNormOf(q)) }
+      .toDF("q_idx", "q_vec", "q_inv")
+    filtered.crossJoin(broadcast(qdf))
+  }
+
+  /** The shared query dimension; rejects an empty or ragged batch. */
+  private[graft] def queryDim: Int = {
     require(queries.nonEmpty, "query batch must not be empty")
-    val dim = queries.head.length
-    require(queries.forall(_.length == dim),
-      s"all query vectors must share one dimension, got ${queries.map(_.length).distinct}")
+    val dims = queries.map(_.length).distinct
+    require(dims.size == 1,
+      s"graft: ragged query batch — all query vectors must share one dimension, " +
+        s"got ${dims.mkString(" and ")}")
+    dims.head
+  }
 
-    val filtered = metaPred.map(store.df.filter).getOrElse(store.df)
+  /** Direction: an explicit take_min/take_max wins; take(n) pins the
+    * metric's default (ref vec.rs:156-158); with NO take at all the
+    * reference's collect falls back to TakeType::Max regardless of metric
+    * (vec.rs `unwrap_or(&TakeType::Max)`) — a filter-only Euclidean plan
+    * therefore orders LARGEST-first, matching the reference. */
+  private def scoreOrder: Column =
+    takeType.getOrElse(if (k.isDefined) metric.defaultTake else TakeType.Max) match {
+      case TakeType.Max => col("score").desc
+      case TakeType.Min => col("score").asc
+    }
+
+  /** The one scoring tail behind every top-k entry point ([[collect]],
+    * [[VecStore.queryBatchPerQuery]], the ANN batch searches). `rows` are
+    * store rows, already pruned by the caller, that carry their query as
+    * `queryVec` with its inverse norm `queryInv`. Without a `queryKey` the
+    * top-k is one global order + limit (TakeOrderedAndProject); with one,
+    * each key gets its own k through a `row_number` window
+    * (WindowGroupLimit: a bounded heap per key, no global sort). Result:
+    * key, id, score, then the store's metadata columns. */
+  private[graft] def scoreTopK(
+      rows: DataFrame,
+      queryVec: Column,
+      queryInv: Column,
+      queryKey: Option[String] = None): DataFrame = {
+    val dim = queryDim
+    // One k rule for every entry point: k < 0 raises Spark's own
+    // INVALID_LIMIT_LIKE_EXPRESSION (Dataset.limit checks eagerly; the
+    // window path has no limit to check), k = 0 is an empty result.
+    k.filter(_ < 0).foreach(rows.limit)
+
     val v = col(store.vecCol)
-    val storeInv = store.invNormCol.map(col)
-
+    val raw = vectors.score(metric, v, queryVec, store.invNormCol.map(col), Some(queryInv))
     // Dimension guard: a query/store dim mismatch (or a NULL embedding)
-    // must fail with a descriptive error at collect — the reference errors
-    // rather than silently returning nothing (vec.rs:170-203,
-    // tests/vec_store_tests.rs:52-63). zip_with would otherwise pad with
-    // nulls and yield NULL scores, which `!isnan` does NOT drop.
-    // Jaccard is exempt: it scores SETS, whose cardinalities legitimately
-    // differ row to row (Metric.Jaccard scaladoc).
-    def dimGuard(scoreExpr: Column): Column = metric match {
+    // must fail with a descriptive error — the reference errors rather
+    // than silently returning nothing (vec.rs:170-203,
+    // tests/vec_store_tests.rs:52-63). The kernels resolve a length
+    // mismatch by the SHORTER length, so a mis-dimensioned row would
+    // otherwise score a real (wrong) prefix dot. Jaccard is exempt: it
+    // scores SETS, whose cardinalities legitimately differ row to row
+    // (Metric.Jaccard scaladoc) — but a NULL set must still raise.
+    val guarded = metric match {
       case Metric.Jaccard =>
-        // sets legitimately differ in CARDINALITY, so only the size
-        // check is relaxed — a NULL set column must still raise: its
-        // NULL score passes !isnan and would sort FIRST under takeMin
-        when(v.isNotNull, scoreExpr).otherwise(raise_error(lit(
+        when(v.isNotNull, raw).otherwise(raise_error(lit(
           s"graft: NULL set in column '${store.vecCol}' for Jaccard scoring")))
       case _ =>
-        when(size(v) === lit(dim), scoreExpr).otherwise(raise_error(format_string(
+        when(size(v) === lit(dim), raw).otherwise(raise_error(format_string(
           s"graft: query dim $dim does not match store vector dim %s " +
             s"(or embedding is NULL) in column '${store.vecCol}'",
           size(v).cast("string"))))
     }
+    val score = roundScoreDecimals.fold(guarded)(vectors.quantize(guarded, _))
 
-    val scored =
-      if (queries.length == 1) {
-        val q = queries.head
-        filtered.withColumn("score",
-          dimGuard(vectors.score(metric, v, vectors.vecLit(q), storeInv,
-            Some(lit(vectors.invNormOf(q))))))
-      } else {
-        // Batch: broadcast the tiny query table, score every (row, query)
-        // pair, then ONE global top-k across all pairs (ref semantics:
-        // vec_store_tests.rs:899-924). Not a per-query window — that would
-        // be a different (wrong) result shape.
-        val spark = store.df.sparkSession
-        import spark.implicits._
-        val qdf = queries.zipWithIndex
-          .map { case (q, i) => (i, q, vectors.invNormOf(q)) }
-          .toDF("q_idx", "q_vec", "q_inv")
-        filtered
-          .crossJoin(broadcast(qdf))
-          .withColumn("score",
-            dimGuard(vectors.score(metric, v, col("q_vec"), storeInv, Some(col("q_inv")))))
-      }
-
-    val rounded = roundScoreDecimals match {
-      case Some(d) => scored.withColumn("score", vectors.quantize(col("score"), d))
-      case None    => scored
+    // One drop rule: NaN scores are dropped from results (ref:
+    // vec_compute.rs:237-239) — Spark sorts NaN as the LARGEST double —
+    // and a NULL score (e.g. a NULL precomputed inv_norm) counts as NaN,
+    // since NULL would sort FIRST under an ascending take. One predicate,
+    // so the score is evaluated once by the filter.
+    val scored = rows.withColumn("score", score)
+      .filter(!isnan(coalesce(col("score"), lit(Double.NaN))))
+    val thresholded = scoreFilter.fold(scored) { case (t, cmp) =>
+      scored.filter(cmpExpr(col("score"), t, cmp))
     }
 
-    // NaN scores are dropped from results (ref: vec_compute.rs:237-239).
-    // Spark would otherwise sort NaN as the LARGEST double.
-    val nanFree = rounded.filter(!isnan(col("score")))
-
-    val thresholded = scoreFilter match {
-      case Some((t, cmp)) => nanFree.filter(cmpExpr(col("score"), t, cmp))
-      case None           => nanFree
+    val byScore = Seq(scoreOrder, col(store.idCol).asc)
+    val top = queryKey match {
+      case None =>
+        val ordered = thresholded.orderBy(byScore: _*)
+        k.fold(ordered)(ordered.limit)
+      case Some(key) =>
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col(key)).orderBy(byScore: _*)
+        thresholded.withColumn("_rnk", row_number().over(w))
+          .where(col("_rnk") <= k.getOrElse(Int.MaxValue))
     }
-
-    // Direction: an explicit take_min/take_max wins; take(n) pins the
-    // metric's default (ref vec.rs:156-158); with NO take at all the
-    // reference's collect falls back to TakeType::Max regardless of metric
-    // (vec.rs `unwrap_or(&TakeType::Max)`) — a filter-only Euclidean plan
-    // therefore orders LARGEST-first, matching the reference.
-    val dir = takeType.getOrElse(
-      if (k.isDefined) metric.defaultTake else TakeType.Max)
-    val scoreOrd = dir match {
-      case TakeType.Max => col("score").desc
-      case TakeType.Min => col("score").asc
-    }
-    val ordered = thresholded.orderBy(scoreOrd, col(store.idCol).asc)
-    val limited = k.map(ordered.limit).getOrElse(ordered)
-
-    val out = Seq(store.idCol, "score") ++ store.metaCols
-    limited.select(out.map(col): _*)
+    val out = queryKey.toSeq ++ Seq(store.idCol, "score") ++ store.metaCols
+    top.select(out.map(col): _*)
   }
 }

@@ -1,9 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
-import graft.core.{Metric, VecStore}
+import graft.core.{Metric, SearchPlan, TakeType, VecStore}
 import graft.functions.vectors
 
 /** Approximate nearest-neighbor primitives over an embedding column.
@@ -100,21 +101,20 @@ object ann {
       q: Seq[Double],
       k: Int,
       nbits: Int = 6,
-      table: Int = 0): DataFrame = {
-    val dim = q.length
-    val qSig = lshSignatureOf(q, table, nbits)
-    val persistedMatches = store.indexMeta.exists(m =>
-      m.lshBits.contains(nbits) && m.lshTable == table)
-    val bucketed =
-      if (persistedMatches && store.df.columns.contains(graft.index.VecIndex.LshBucketCol))
-        store.df.filter(col(graft.index.VecIndex.LshBucketCol) === lit(qSig))
-      else
-        store.df.filter(lshSignature(col(store.vecCol), table, nbits, dim) === lit(qSig))
-    store.copy(df = bucketed)
-      .query(q, Metric.Cosine)
-      .take(k)
-      .withScoreRounding(4)
-      .collect()
+      table: Int = 0): DataFrame =
+    // the probe set's first signature is the query's own bucket
+    lshSearchMultiProbe(store, q, k, nbits, probes = 1, table)
+
+  /** The LSH bucket of every store row: the persisted partition column
+    * when the index metadata confirms it was built with this same
+    * (table, nbits) — so a filter on it prunes directories — else the
+    * signature computed in-scan. */
+  private def lshBucket(store: VecStore, table: Int, nbits: Int, dim: Int): Column = {
+    val persisted = store.indexMeta.exists(m =>
+      m.lshBits.contains(nbits) && m.lshTable == table) &&
+      store.df.columns.contains(graft.index.VecIndex.LshBucketCol)
+    if (persisted) col(graft.index.VecIndex.LshBucketCol)
+    else lshSignature(col(store.vecCol), table, nbits, dim)
   }
 
   /** BATCH serving over the LSH-bucketed layout: `B` queries share ONE
@@ -136,79 +136,46 @@ object ann {
       k: Int,
       nbits: Int = 6,
       table: Int = 0): DataFrame = {
-    val dim = validateBatch(queries)
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    val spark = store.df.sparkSession
-    // REPL-safe explicit schema (no product-encoder reflection)
-    val qdf = spark.createDataFrame(
-      java.util.Arrays.asList(queries.map { case (qid, q) =>
+    val plan = batchPlan(store, queries, k)
+    val qdf = queryTable(store, StructField("_q_bucket", LongType, nullable = false),
+      queries.map { case (qid, q) =>
         Row(qid, lshSignatureOf(q, table, nbits), q, vectors.invNormOf(q))
-      }: _*),
+      })
+    val buckets = queries.map(q => lshSignatureOf(q._2, table, nbits)).distinct
+    batchTopK(plan,
+      store.df
+        .withColumn("_bucket", lshBucket(store, table, nbits, plan.queryDim))
+        .where(col("_bucket").isin(buckets: _*))
+        .join(broadcast(qdf), col("_bucket") === col("_q_bucket")))
+  }
+
+  /** Cosine, per-query `k`, 4-dp scores: the [[SearchPlan]] of both batch
+    * serving paths (its tail rejects an empty or ragged batch). */
+  private def batchPlan(
+      store: VecStore, queries: Seq[(Long, Seq[Double])], k: Int): SearchPlan = {
+    require(queries.map(_._1).distinct.size == queries.size,
+      "graft: duplicate query_id in batch — each id keys one result group")
+    SearchPlan(store, queries.map(_._2.toIndexedSeq).toIndexedSeq,
+      Metric.Cosine, k = Some(k), roundScoreDecimals = Some(4))
+  }
+
+  /** The broadcast query table of a batch path: `query_id`, the path's
+    * join key, the query vector and its driver-side inverse norm. */
+  private def queryTable(store: VecStore, key: StructField, rows: Seq[Row]): DataFrame =
+    // REPL-safe explicit schema (no product-encoder reflection)
+    store.df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
       StructType(Seq(
         StructField("query_id", LongType, nullable = false),
-        StructField("_q_bucket", LongType, nullable = false),
+        key,
         StructField("_q_vec", ArrayType(DoubleType, containsNull = false),
           nullable = false),
         StructField("_q_inv", DoubleType, nullable = false))))
-    val buckets = queries.map(q => lshSignatureOf(q._2, table, nbits)).distinct
-    val persistedMatches = store.indexMeta.exists(m =>
-      m.lshBits.contains(nbits) && m.lshTable == table)
-    val bucketExpr =
-      if (persistedMatches &&
-          store.df.columns.contains(graft.index.VecIndex.LshBucketCol))
-        col(graft.index.VecIndex.LshBucketCol)
-      else lshSignature(col(store.vecCol), table, nbits, dim)
-    batchCosineTopK(
-      store.df
-        .withColumn("_bucket", bucketExpr)
-        .where(col("_bucket").isin(buckets: _*))
-        .join(broadcast(qdf), col("_bucket") === col("_q_bucket")),
-      store, k, dim)
-  }
 
-  /** Shared scoring tail of the batch serving paths ([[lshSearchBatch]],
-    * [[ivfSearchBatch]]): rows arrive joined to their queries
-    * (`query_id`, `_q_vec`, `_q_inv`); score with the index's
-    * precomputed inverse norm when present (the single-query path's
-    * discipline) and apply its NaN/null rules — NaN sorts LARGEST under
-    * desc and would displace every genuine result; a null score
-    * (null/mis-dimensioned embedding) must not back-fill a sparse
-    * bucket's top-k. Per-query top-k is a rank window
-    * (WindowGroupLimit bounded heap), never a global sort. */
-  private def batchCosineTopK(
-      joined: DataFrame, store: VecStore, k: Int, dim: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val v = col(store.vecCol).cast("array<double>")
-    val storeInv = store.invNormCol.map(col).getOrElse(vectors.invNorm(v))
-    joined
-      // the single-query path's dim guard (SearchPlan): the dot kernel
-      // resolves a length mismatch by the SHORTER length, so a corrupted
-      // row would otherwise score a real (wrong) prefix dot and slip
-      // into a top-k instead of raising like lshSearch does
-      .withColumn("score", when(size(v) === lit(dim), vectors.quantize(
-        vectors.dotProduct(v, col("_q_vec")) * storeInv * col("_q_inv"), 4))
-        .otherwise(raise_error(format_string(
-          s"graft: query dim $dim does not match store vector dim %s " +
-            s"(or embedding is NULL) in column '${store.vecCol}'",
-          size(v).cast("string")))))
-      .where(col("score").isNotNull && !isnan(col("score")))
-      .withColumn("_rnk", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("score").desc, col(store.idCol))))
-      .where(col("_rnk") <= k)
-      .select(col("query_id"), col(store.idCol), col("score"))
-  }
-
-  private def validateBatch(queries: Seq[(Long, Seq[Double])]): Int = {
-    require(queries.nonEmpty, "graft: empty query batch")
-    require(queries.map(_._1).distinct.size == queries.size,
-      "graft: duplicate query_id in batch — each id keys one result group")
-    val dim = queries.head._2.length
-    require(queries.forall(_._2.length == dim),
-      s"graft: ragged query dims in batch (expected $dim)")
-    dim
-  }
+  /** Rows joined to their queries through [[queryTable]], scored and
+    * ranked per `query_id` by the shared [[SearchPlan]] tail. */
+  private def batchTopK(plan: SearchPlan, joined: DataFrame): DataFrame =
+    plan.scoreTopK(joined, col("_q_vec"), col("_q_inv"), Some("query_id"))
+      .select(col("query_id"), col(plan.store.idCol), col("score"))
 
   /** [[lshSearchBatch]]'s twin over the PERSISTED IVF layout: each
     * query's `nprobe` nearest lists are computed driver-side, the scan
@@ -222,33 +189,20 @@ object ann {
       queries: Seq[(Long, Seq[Double])],
       k: Int,
       nprobe: Int): DataFrame = {
-    val centroids = store.indexMeta.flatMap(_.ivfCentroids).getOrElse(
-      throw new IllegalArgumentException(
-        "graft: store has no persisted IVF centroids — build the index " +
-          "with BuildOptions(ivfCentroids = Some(...))"))
-    val dim = validateBatch(queries)
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    val spark = store.df.sparkSession
+    val centroids = persistedCentroids(store)
+    val plan = batchPlan(store, queries, k)
     val probeRows = queries.flatMap { case (qid, q) =>
       val inv = vectors.invNormOf(q)
       probeIds(centroids, q, nprobe).map(c => Row(qid, c, q, inv))
     }
-    val qdf = spark.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*),
-      StructType(Seq(
-        StructField("query_id", LongType, nullable = false),
-        StructField("_probe", IntegerType, nullable = false),
-        StructField("_q_vec", ArrayType(DoubleType, containsNull = false),
-          nullable = false),
-        StructField("_q_inv", DoubleType, nullable = false))))
+    val qdf = queryTable(store, StructField("_probe", IntegerType, nullable = false),
+      probeRows)
     val cl = graft.index.VecIndex.IvfClusterCol
     val allProbes = probeRows.map(_.getInt(1)).distinct
-    batchCosineTopK(
+    batchTopK(plan,
       store.df
         .filter(col(cl).isin(allProbes: _*))
-        .join(broadcast(qdf), col(cl) === col("_probe")),
-      store, k, dim)
+        .join(broadcast(qdf), col(cl) === col("_probe")))
   }
 
   /** Two-stage search over a PERSISTED Johnson–Lindenstrauss projection
@@ -287,21 +241,42 @@ object ann {
       s"graft: index has RP metadata but no persisted $rpCol column")
     require(q.length == mat.head.length,
       s"graft: query dim ${q.length} != projection input dim ${mat.head.length}")
-    val cand = math.max(k, if (candK > 0) candK else 4 * k)
     val pq = vectors.projectOf(q, mat)
-    val rpScore = vectors.quantize(
+    rerankPool(store, q, k, candK, TakeType.Max, vectors.quantize(
       vectors.score(Metric.Cosine, col(rpCol), vectors.vecLit(pq),
-        queryInvNorm = Some(lit(vectors.invNormOf(pq)))), 4)
-    val pool = store.df
-      .withColumn("_rp_score", rpScore)
-      .orderBy(col("_rp_score").desc, col(store.idCol).asc)
-      .limit(cand)
-    store.copy(df = pool.drop("_rp_score"))
-      .query(q, Metric.Cosine)
-      .take(k)
-      .withScoreRounding(4)
-      .collect()
+        queryInvNorm = Some(lit(vectors.invNormOf(pq)))), 4))
   }
+
+  /** The second stage shared by [[rpSearch]], [[matryoshkaSearch]] and
+    * [[binarySearch]]: pool the `candK` rows best by the `coarse` score
+    * (`dir`, id tiebreak; a TakeOrderedAndProject — per-partition heaps
+    * plus one merge; `candK = 0` means `4·k`, never below `k`), then
+    * exact-rerank only the pool. */
+  private def rerankPool(
+      store: VecStore,
+      q: Seq[Double],
+      k: Int,
+      candK: Int,
+      dir: TakeType,
+      coarse: Column): DataFrame = {
+    val cand = math.max(k, if (candK > 0) candK else 4 * k)
+    val order = dir match {
+      case TakeType.Max => col("_coarse").desc
+      case TakeType.Min => col("_coarse").asc
+    }
+    val pool = store.df
+      .withColumn("_coarse", coarse)
+      .orderBy(order, col(store.idCol).asc)
+      .limit(cand)
+    exactTopK(store, pool.drop("_coarse"), q, k)
+  }
+
+  /** Exact cosine top-k of `q` over `rows` (a pruned view of `store`),
+    * scores rounded to 4 dp — the final stage of every single-query ANN
+    * search, through the one [[SearchPlan]] tail. */
+  private def exactTopK(
+      store: VecStore, rows: DataFrame, q: Seq[Double], k: Int): DataFrame =
+    store.copy(df = rows).query(q, Metric.Cosine).take(k).withScoreRounding(4).collect()
 
   /** Matryoshka (prefix-dimension) two-stage cosine top-k: coarse-score
     * on the FIRST `prefixDims` dimensions only, keep the top `candK`
@@ -328,21 +303,11 @@ object ann {
       candK: Int = 0): DataFrame = {
     require(prefixDims >= 1 && prefixDims <= q.length,
       s"graft: need 1 <= prefixDims <= ${q.length}, got $prefixDims")
-    val cand = math.max(k, if (candK > 0) candK else 4 * k)
     val qp = q.take(prefixDims)
     val prefix = slice(vectors.asDoubleArray(col(store.vecCol)), 1, prefixDims)
-    val coarse = vectors.quantize(
+    rerankPool(store, q, k, candK, TakeType.Max, vectors.quantize(
       vectors.score(Metric.Cosine, prefix, vectors.vecLit(qp),
-        queryInvNorm = Some(lit(vectors.invNormOf(qp)))), 4)
-    val pool = store.df
-      .withColumn("_mrl_score", coarse)
-      .orderBy(col("_mrl_score").desc, col(store.idCol).asc)
-      .limit(cand)
-    store.copy(df = pool.drop("_mrl_score"))
-      .query(q, Metric.Cosine)
-      .take(k)
-      .withScoreRounding(4)
-      .collect()
+        queryInvNorm = Some(lit(vectors.invNormOf(qp)))), 4))
   }
 
   /** Multi-probe probe set for a query (Lv et al. 2007): the query's own
@@ -387,21 +352,9 @@ object ann {
       nbits: Int = 6,
       probes: Int = 4,
       table: Int = 0): DataFrame = {
-    val dim = q.length
     val sigs = lshProbeSigsOf(q, table, nbits, probes)
-    val persistedMatches = store.indexMeta.exists(m =>
-      m.lshBits.contains(nbits) && m.lshTable == table)
-    val bucketed =
-      if (persistedMatches && store.df.columns.contains(graft.index.VecIndex.LshBucketCol))
-        store.df.filter(col(graft.index.VecIndex.LshBucketCol).isin(sigs: _*))
-      else
-        store.df.filter(
-          lshSignature(col(store.vecCol), table, nbits, dim).isin(sigs: _*))
-    store.copy(df = bucketed)
-      .query(q, Metric.Cosine)
-      .take(k)
-      .withScoreRounding(4)
-      .collect()
+    exactTopK(store,
+      store.df.filter(lshBucket(store, table, nbits, q.length).isin(sigs: _*)), q, k)
   }
 
   /** Nearest-centroid assignment: adds `cluster_id` = argmin squared-L2
@@ -573,11 +526,8 @@ object ann {
       nprobe: Int): DataFrame = {
     val probed = probeIds(centroids, q, nprobe)
     val assigned = ivfAssign(store.df, centroids, store.vecCol)
-    store.copy(df = assigned.filter(col("cluster_id").isin(probed: _*)).drop("cluster_id"))
-      .query(q, Metric.Cosine)
-      .take(k)
-      .withScoreRounding(4)
-      .collect()
+    exactTopK(store,
+      assigned.filter(col("cluster_id").isin(probed: _*)).drop("cluster_id"), q, k)
   }
 
   /** IVF cosine top-k over an index built with
@@ -592,18 +542,18 @@ object ann {
       q: Seq[Double],
       k: Int,
       nprobe: Int): DataFrame = {
-    val centroids = store.indexMeta.flatMap(_.ivfCentroids).getOrElse(
+    val probed = probeIds(persistedCentroids(store), q, nprobe)
+    val cl = graft.index.VecIndex.IvfClusterCol
+    exactTopK(store, store.df.filter(col(cl).isin(probed: _*)).drop(cl), q, k)
+  }
+
+  /** The build-time IVF centroids an index persisted in its metadata. */
+  private def persistedCentroids(store: VecStore): Seq[(Int, Seq[Double])] =
+    store.indexMeta.flatMap(_.ivfCentroids).getOrElse(
       throw new IllegalArgumentException(
         "graft: store has no persisted IVF centroids — build the index " +
-          "with BuildOptions(ivfCentroids = Some(...)) or use ivfSearch"))
-    val probed = probeIds(centroids, q, nprobe)
-    val cl = graft.index.VecIndex.IvfClusterCol
-    store.copy(df = store.df.filter(col(cl).isin(probed: _*)).drop(cl))
-      .query(q, Metric.Cosine)
-      .take(k)
-      .withScoreRounding(4)
-      .collect()
-  }
+          "with BuildOptions(ivfCentroids = Some(...)), or use ivfSearch " +
+          "on a plain store"))
 
   /** IVF-PQ search (the FAISS-style serving layout, Jégou et al. 2011)
     * over an index built with BOTH `ivfCentroids` and `pqCodebooks`:
@@ -619,12 +569,10 @@ object ann {
       q: Seq[Double],
       k: Int,
       nprobe: Int): DataFrame = {
-    val meta = store.indexMeta.getOrElse(throw new IllegalArgumentException(
-      "graft: store has no index metadata — build with BuildOptions(ivfCentroids, pqCodebooks)"))
-    val centroids = meta.ivfCentroids.getOrElse(throw new IllegalArgumentException(
-      "graft: IVF-PQ needs BuildOptions(ivfCentroids = Some(...)) at build time"))
-    val cbs = meta.pqCodebooks.getOrElse(throw new IllegalArgumentException(
-      "graft: IVF-PQ needs BuildOptions(pqCodebooks = Some(...)) at build time"))
+    val centroids = persistedCentroids(store)
+    val cbs = store.indexMeta.flatMap(_.pqCodebooks).getOrElse(
+      throw new IllegalArgumentException(
+        "graft: IVF-PQ needs BuildOptions(pqCodebooks = Some(...)) at build time"))
     require(store.df.columns.contains("pq_code"),
       "graft: index has PQ metadata but no persisted pq_code column")
     val probed = probeIds(centroids, q, nprobe)
@@ -997,8 +945,7 @@ object ann {
     require(queries.nonEmpty, "graft: recall needs at least one query")
     require(k >= 1, s"graft: recall needs k >= 1, got $k")
     queries.zipWithIndex.map { case (q, i) =>
-      val exact = store.query(q, Metric.Cosine).take(k)
-        .withScoreRounding(4).collect().select(col(store.idCol))
+      val exact = exactTopK(store, store.df, q, k).select(col(store.idCol))
       val approxIds = approx(store, q).select(col(store.idCol))
       exact.join(approxIds, Seq(store.idCol))
         .agg(count(lit(1)).as("hits"))
@@ -1040,19 +987,9 @@ object ann {
       dim: Int = 64,
       candK: Int = 0): DataFrame = {
     require(k >= 1, s"graft: binarySearch needs k >= 1, got $k")
-    val cand = math.max(k, if (candK > 0) candK else 4 * k)
-    val coarse = vectors.hammingPacked(
+    rerankPool(store, q, k, candK, TakeType.Min, vectors.hammingPacked(
       vectors.signBitsPacked(col(store.vecCol), dim),
-      vectors.longArrayLit(vectors.signBitsPackedOf(q)))
-    val pool = store.df
-      .withColumn("_bq_score", coarse)
-      .orderBy(col("_bq_score").asc, col(store.idCol).asc)
-      .limit(cand)
-    store.copy(df = pool.drop("_bq_score"))
-      .query(q, Metric.Cosine)
-      .take(k)
-      .withScoreRounding(4)
-      .collect()
+      vectors.longArrayLit(vectors.signBitsPackedOf(q))))
   }
 
   /** Recall@k of [[binarySearch]] against the exact scan — the

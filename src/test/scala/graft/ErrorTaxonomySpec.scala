@@ -19,6 +19,9 @@ class ErrorTaxonomySpec extends SparkSpec {
   private lazy val store = VecStore(
     Seq((1L, Array(1.0, 0.0), 5)).toDF("vec_id", "embedding", "label"))
 
+  private def messages(t: Throwable): Seq[String] =
+    Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+
   test("unknown column surfaces at collect() as UNRESOLVED_COLUMN") {
     val plan = store.query(Seq(1.0, 0.0), Metric.Cosine)
       .metaFilter(col("no_such_column") > 1)
@@ -106,6 +109,36 @@ class ErrorTaxonomySpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](
       store.queryBatch(Seq(Seq(1.0, 0.0), Seq(1.0)), Metric.Cosine).collect())
     assert(e.getMessage.contains("dimension"))
+    // the per-query batch shares the guard: the kernels would otherwise
+    // score prefix dots over the shorter length
+    val p = intercept[IllegalArgumentException](
+      store.queryBatchPerQuery(Seq(Seq(1.0, 0.0), Seq(1.0)), Metric.Cosine, k = 1))
+    assert(p.getMessage.contains("dimension") && p.getMessage.contains("got 2 and 1"),
+      p.getMessage)
+    val w = intercept[Exception](
+      store.queryBatchPerQuery(Seq(Seq(1.0)), Metric.Cosine, k = 1).collect())
+    assert(messages(w).exists(_.contains("query dim 1 does not match store vector dim 2")),
+      messages(w))
+  }
+
+  test("negative k raises INVALID_LIMIT_LIKE_EXPRESSION on every top-k entry point; k = 0 is empty") {
+    import graft.ops.ann
+    val q = Seq(1.0, 0.0)
+    val dir = java.nio.file.Files.createTempDirectory("graft-negk-").toString
+    val (ivf, _) = graft.index.VecIndex.build(store.df, dir + "/idx",
+      opts = graft.index.VecIndex.BuildOptions(ivfCentroids = Some(Seq(0 -> q))))
+    def condition(f: => Any): String =
+      String.valueOf(intercept[AnalysisException](f).getCondition)
+    Seq(
+      condition(store.query(q, Metric.Cosine).take(-1).collect()),
+      condition(store.queryBatchPerQuery(Seq(q, q), Metric.Cosine, k = -1)),
+      condition(ann.lshSearch(store, q, k = -1)),
+      condition(ann.lshSearchBatch(store, Seq((0L, q)), k = -1)),
+      condition(ann.ivfSearchBatch(ivf, Seq((0L, q)), k = -1, nprobe = 1))
+    ).foreach(c => assert(c.startsWith("INVALID_LIMIT_LIKE_EXPRESSION"), c))
+    assert(store.queryBatchPerQuery(Seq(q, q), Metric.Cosine, k = 0).count() == 0)
+    assert(ann.lshSearchBatch(store, Seq((0L, q)), k = 0).count() == 0)
+    assert(ann.ivfSearchBatch(ivf, Seq((0L, q)), k = 0, nprobe = 1).count() == 0)
   }
 
   test("round-8 surfaces validate eagerly: rp dims, packed dims, bloom shape") {

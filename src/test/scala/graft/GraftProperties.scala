@@ -78,6 +78,29 @@ object GraftProperties extends Properties("graft") {
       got.map(math.abs) == expected.map(math.abs)
     }
 
+  // small-integer coordinates so rounded scores tie often: the (score, id)
+  // tiebreak must order ties the same way on both paths
+  private val genTieVec: Gen[Seq[Double]] =
+    Gen.listOfN(4, Gen.choose(-2, 2).map(_.toDouble)).map(_.toSeq)
+
+  property("per-query batch rows for query i = query(q_i).take(k), any metric, ties included") =
+    forAll(for {
+      vecs <- Gen.chooseNum(3, 20).flatMap(n => Gen.listOfN(n, genTieVec))
+      k <- Gen.chooseNum(0, vecs.size)
+      qs <- Gen.listOfN(3, genTieVec)
+    } yield (vecs, k, qs)) { case (vecs, k, qs) =>
+      val store = storeOf(vecs)
+      Seq(Metric.Cosine, Metric.Euclidean, Metric.DotProduct, Metric.Manhattan).forall { m =>
+        val per = store.queryBatchPerQuery(qs, m, k, roundScoreDecimals = Some(4))
+          .select("q_idx", "vec_id", "score").as[(Int, Long, Double)].collect().toSeq
+        qs.indices.forall { i =>
+          val alone = store.query(qs(i), m).take(k).withScoreRounding(4).collect()
+            .select("vec_id", "score").as[(Long, Double)].collect().toSeq
+          per.filter(_._1 == i).map(r => (r._2, r._3)) == alone
+        }
+      }
+    }
+
   property("euclidean: l2sq(v,v) = 0; no-take collects Max-first; take() pins ascending") =
     forAll(genStore) { vecs =>
       val store = storeOf(vecs)
