@@ -133,7 +133,7 @@ final case class SearchPlan(
   def collect(): DataFrame =
     if (queries.length == 1) {
       val q = queries.head
-      scoreTopK(filtered, vectors.vecLit(q), lit(vectors.invNormOf(q)))
+      scoreTopK(filtered, vectors.vecLit(q), vectors.queryConst(vectors.invNormOf(q)))
     } else {
       // Batch: score every (row, query) pair, then ONE global top-k across
       // all pairs (ref semantics: vec_store_tests.rs:899-924). Not a
@@ -227,8 +227,9 @@ final case class SearchPlan(
     // One drop rule: NaN scores are dropped from results (ref:
     // vec_compute.rs:237-239) — Spark sorts NaN as the LARGEST double —
     // and a NULL score (e.g. a NULL precomputed inv_norm) counts as NaN,
-    // since NULL would sort FIRST under an ascending take. One predicate,
-    // so the score is evaluated once by the filter.
+    // since NULL would sort FIRST under an ascending take. One predicate
+    // for both; the physical plan still computes the score twice, once in
+    // the Filter and once in the Project that outputs it.
     val scored = rows.withColumn("score", score)
       .filter(!isnan(coalesce(col("score"), lit(Double.NaN))))
     val thresholded = scoreFilter.fold(scored) { case (t, cmp) =>

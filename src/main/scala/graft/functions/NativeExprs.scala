@@ -4,11 +4,11 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, LeafExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.bridge.{toColumn => column, toExpression => expression}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused native kernels for the text-dedup hot path.
@@ -943,6 +943,9 @@ object NativeExprs {
   def vecHamming(a: Column, b: Column): Column =
     column(VecHammingExpr(expression(a), expression(b)))
 
+  /** Column: a per-query double bound by reference (see [[QueryConstExpr]]). */
+  def queryConst(x: Double): Column = column(QueryConstExpr(x))
+
   /** Column: fused quantize + upper-triangle products (see
     * [[GramProductsExpr]]) — the [[graft.ops.linalg.gram]] hot loop. */
   def gramProducts(v: Column, dim: Int, q: Long): Column =
@@ -1450,6 +1453,35 @@ case class LshSigExpr(child: Expression, planes: IndexedSeq[IndexedSeq[Double]])
   }
   override protected def withNewChildInternal(newChild: Expression): LshSigExpr =
     copy(child = newChild)
+}
+
+/** A per-query double that generated code reads from a reference object
+  * instead of inlining. A double `Literal` is spliced into the stage's
+  * Java source as a constant, so each distinct value would be a distinct
+  * class and every fresh search would compile its own stage and run its
+  * scoring loop cold. Here the value rides in the stage's `references`
+  * array and is copied to a field once per task: the source is the same
+  * for every value, so every query against one store reuses one
+  * compiled class (Spark's codegen cache keys on the source). Not
+  * foldable, so ConstantFolding leaves it in place; deterministic and
+  * non-null. Plans print it as `query_const(<value>)`. */
+case class QueryConstExpr(value: Double) extends LeafExpression {
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = false
+  override def foldable: Boolean = false
+  override def prettyName: String = "query_const"
+  override def sql: String = s"$prettyName($value)"
+  override def eval(input: InternalRow): Any = value
+  override protected def doGenCode(
+      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
+      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
+      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, ExprCode, JavaCode}
+    val ref = ctx.addReferenceObj("queryConst", java.lang.Double.valueOf(value), "java.lang.Double")
+    val field = ctx.addMutableState(CodeGenerator.JAVA_DOUBLE, "queryConst",
+      v => s"$v = $ref.doubleValue();")
+    ExprCode.forNonNullValue(JavaCode.global(field, DoubleType))
+  }
 }
 
 /** See [[NativeExprs.bpeMergePair]]. */

@@ -28,8 +28,19 @@ object vectors {
   /** Cast any numeric array column to array<double> for stable math. */
   def asDoubleArray(v: Column): Column = v.cast(ArrayType(DoubleType))
 
-  /** Literal query vector as an array<double> Column. */
-  def vecLit(q: Seq[Double]): Column = array(q.map(lit): _*)
+  /** Literal query vector as an array<double> Column (non-null
+    * elements): one typed literal, so the analyzer and ConstantFolding
+    * have no d-child `array(lit, ...)` to walk on every query. Codegen
+    * binds an array literal by reference, so the vector never enters the
+    * generated source. */
+  def vecLit(q: Seq[Double]): Column = typedLit(q.toArray)
+
+  /** A per-query scalar (a query inverse norm) for a codegen'd scoring
+    * expression. Unlike `lit(x)`, whose value is inlined into the
+    * generated Java source so that every query compiles a new stage, the
+    * value is bound by reference and every query against one store
+    * reuses one compiled class. Same double, same result. */
+  def queryConst(x: Double): Column = NativeExprs.queryConst(x)
 
   /** Dot product — sequential fold in double, as one native compiled
     * loop (HOFs evaluate interpreted; this is the hot scoring kernel, the

@@ -244,7 +244,7 @@ object ann {
     val pq = vectors.projectOf(q, mat)
     rerankPool(store, q, k, candK, TakeType.Max, vectors.quantize(
       vectors.score(Metric.Cosine, col(rpCol), vectors.vecLit(pq),
-        queryInvNorm = Some(lit(vectors.invNormOf(pq)))), 4))
+        queryInvNorm = Some(vectors.queryConst(vectors.invNormOf(pq)))), 4))
   }
 
   /** The second stage shared by [[rpSearch]], [[matryoshkaSearch]] and
@@ -307,7 +307,7 @@ object ann {
     val prefix = slice(vectors.asDoubleArray(col(store.vecCol)), 1, prefixDims)
     rerankPool(store, q, k, candK, TakeType.Max, vectors.quantize(
       vectors.score(Metric.Cosine, prefix, vectors.vecLit(qp),
-        queryInvNorm = Some(lit(vectors.invNormOf(qp)))), 4))
+        queryInvNorm = Some(vectors.queryConst(vectors.invNormOf(qp)))), 4))
   }
 
   /** Multi-probe probe set for a query (Lv et al. 2007): the query's own

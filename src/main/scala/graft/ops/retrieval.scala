@@ -326,7 +326,7 @@ object retrieval {
       .select(col(idCol), vectors.asDoubleArray(col(vecCol)).as("e"),
         vectors.invNorm(col(vecCol)).as("inv"))
       .withColumn("rel",
-        vectors.dotProduct(col("e"), vectors.vecLit(q)) * col("inv") * lit(invQ))
+        vectors.dotProduct(col("e"), vectors.vecLit(q)) * col("inv") * vectors.queryConst(invQ))
       .orderBy(col("rel").desc, col(idCol))
       .limit(poolCap)
       .collect()

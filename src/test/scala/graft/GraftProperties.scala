@@ -1,8 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Properties, Test}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.{forAll, forAllNoShrink}
 
 import graft.core.{Cmp, Metric, VecStore}
 import graft.functions.vectors
@@ -62,6 +63,50 @@ object GraftProperties extends Properties("graft") {
       val topk = store.query(q, Metric.DotProduct).vecFilter(t, Cmp.Gt).take(3).collect()
         .select("vec_id").as[Long].collect().toSet
       filtered.forall(_._2 > t) && topk.subsetOf(filtered.map(_._1).toSet)
+    }
+
+  private def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  property("query inverse norm bound by reference = lit: cosine bit-identical, codegen and interpreted") =
+    forAllNoShrink(genStore, genVec) { (vecs, q) =>
+      // An RDD-backed store, so Filter/Project reach codegen instead of
+      // being folded over a local relation at optimization.
+      val base = VecStore(spark.sparkContext
+        .parallelize(vecs.zipWithIndex.map { case (v, i) => (i.toLong, v.toArray) }, 2)
+        .toDF("vec_id", "embedding"))
+      val withInv = base.copy(
+        df = base.df.withColumn("inv_norm", vectors.invNorm(col("embedding"))),
+        invNormCol = Some("inv_norm"))
+      // a zero query has inverse norm 0; a NaN query scores NaN everywhere,
+      // and the NaN rule must still drop every row
+      val queries = Seq(q, Seq.fill(dim)(0.0), q.updated(0, Double.NaN))
+      def bits(df: DataFrame): Seq[(Long, Long)] =
+        df.select("vec_id", "score").as[(Long, Double)].collect().toSeq
+          .map { case (id, s) => (id, java.lang.Double.doubleToRawLongBits(s)) }
+      def agree(wholeStage: Boolean): Boolean = Seq(base, withInv).forall { store =>
+        queries.forall { qq =>
+          // take(all): TakeOrderedAndProject keeps the plan free of an
+          // exchange, so the codegen stage is visible before execution
+          val plan = store.query(qq, Metric.Cosine).take(vecs.length)
+          val boundDf = plan.collect()
+          val bound = bits(boundDf)
+          val inlined = bits(plan.scoreTopK(store.df, vectors.vecLit(qq),
+            lit(vectors.invNormOf(qq))))
+          boundDf.queryExecution.debug.codegenToSeq().nonEmpty == wholeStage &&
+            bound == inlined && (!qq.exists(_.isNaN) || bound.isEmpty)
+        }
+      }
+      agree(wholeStage = true) &&
+        withConf("spark.sql.codegen.wholeStage" -> "false",
+          "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(agree(wholeStage = false))
     }
 
   property("batch query = global top-k over the union of single-query scores") =

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.{Cmp, Metric, VecStore}
+import graft.ops.ann
 
 /** Query-plan semantics mirroring the reference's builder tests
   * (/root/reference/tests/vec_store_tests.rs, meta_tests.rs —
@@ -168,5 +169,34 @@ class SearchPlanSpec extends SparkSpec {
     val empty = idScores(store(Seq(9L -> Seq.empty[Double]))
       .query(Seq.empty[Double], Metric.Jaccard).collect())
     assert(empty == Seq(9L -> 0.0))
+  }
+
+  test("one generated class per store, not per query: per-query scalars are bound by reference") {
+    // Two query vectors must produce byte-identical whole-stage source,
+    // so Spark's codegen cache compiles each store's scoring stage once.
+    // Compared as strings, not global CodegenMetrics counters, so suites
+    // sharing the JVM cannot perturb it. Parquet-backed: a local relation
+    // would be folded at optimization and never reach codegen.
+    val dim = 8
+    val rows = (0 until 64).map(i =>
+      (i.toLong, (0 until dim).map(j => math.sin(i * 13.0 + j)).toArray))
+    val dir = java.nio.file.Files.createTempDirectory("graft-codegen-").toString + "/idx"
+    val (idx, _) = graft.index.VecIndex.build(rows.toDF("vec_id", "embedding"), dir,
+      opts = graft.index.VecIndex.BuildOptions(rpDims = Some(4)))
+    assert(idx.invNormCol.nonEmpty)
+    val plain = VecStore(idx.df.drop(graft.index.VecIndex.InvNormCol))
+    val q1 = (0 until dim).map(j => math.cos(j + 1.0))
+    val q2 = (0 until dim).map(j => math.sin(3.0 * j) + 0.5)
+    def source(df: DataFrame): Seq[String] = df.queryExecution.debug.codegenToSeq().map(_._2)
+    val searches: Seq[(String, Seq[Double] => DataFrame)] = Seq(
+      "collect, store inv_norm" -> (q => idx.query(q, Metric.Cosine).take(3).collect()),
+      "collect, no inv_norm" -> (q => plain.query(q, Metric.Cosine).take(3).collect()),
+      "rpSearch" -> (q => ann.rpSearch(idx, q, k = 3)),
+      "matryoshkaSearch" -> (q => ann.matryoshkaSearch(idx, q, k = 3, prefixDims = 4)))
+    searches.foreach { case (name, search) =>
+      val (a, b) = (source(search(q1)), source(search(q2)))
+      assert(a.nonEmpty, s"$name: no whole-stage codegen in the plan")
+      assert(a == b, s"$name: generated source differs between two query vectors")
+    }
   }
 }
