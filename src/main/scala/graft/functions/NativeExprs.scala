@@ -4,11 +4,14 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, LeafExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, LeafExpression, RowOrdering, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, CollationFactory, CollationSupport, GenericArrayData, TypeUtils}
 import org.apache.spark.sql.graft.bridge.{toColumn => column, toExpression => expression}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused native kernels for the text-dedup hot path.
@@ -101,29 +104,105 @@ object NativeExprs {
     ((h(0) & 0xffL) << 24) | ((h(1) & 0xffL) << 16) | ((h(2) & 0xffL) << 8) | (h(3) & 0xffL)
   }
 
-  /** Distinct word n-gram shingles of one document (insertion order). */
-  def shingles(text: UTF8String, n: Int): Array[UTF8String] = {
-    val toks = text.toLowerCase.toString.split("\\s+", -1).filter(_.nonEmpty)
-    if (toks.length < n) return Array.empty
-    val seen = new java.util.LinkedHashSet[String](toks.length * 2)
+  /** md5 of a string's UTF-8 bytes, read in place when they live in a
+    * byte array (a gram view, an UnsafeArrayData element): no copy. */
+  def md5Of(u: UTF8String): Array[Byte] = {
+    val d = digest.get()
+    d.reset()
+    u.getBaseObject match {
+      case a: Array[Byte] =>
+        d.update(a, (u.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt, u.numBytes)
+      case _ => d.update(u.getBytes)
+    }
+    d.digest()
+  }
+
+  /** [[h32Bytes]] of a string, digested in place ([[md5Of]]). */
+  def h32Of(u: UTF8String): Long = {
+    val h = md5Of(u)
+    ((h(0) & 0xffL) << 24) | ((h(1) & 0xffL) << 16) | ((h(2) & 0xffL) << 8) | (h(3) & 0xffL)
+  }
+
+  /** The six ASCII bytes Java's `\s` matches: space, \t, \n, \x0B, \f,
+    * \r. No byte of a multi-byte UTF-8 sequence is below 0x80, so
+    * splitting the bytes on these equals splitting the decoded string on
+    * `\s+`. */
+  private def isWs(b: Byte): Boolean = b == ' ' || (b >= 9 && b <= 13)
+
+  private val WsPattern = java.util.regex.Pattern.compile("\\s+")
+
+  /** Tokens of the lowercased text — split `\s+`, empties dropped (the
+    * [[graft.ops.text.tokens]] contract) — on the precompiled pattern;
+    * `String.split("\\s+")` compiles the regex on every call. */
+  private[functions] def lowerTokens(u: UTF8String): Array[String] =
+    WsPattern.split(u.toLowerCase.toString, -1).filter(_.nonEmpty)
+
+  /** `lower(text)` exactly as Spark's `lower` computes it for a binary-
+    * collated string: the ASCII path, else ICU case mapping of the valid
+    * string (`spark.sql.icu.caseMappings.enabled`, on by default), else
+    * Java's. `UTF8String.toLowerCase` is the Java mapping of `toString`,
+    * which differs on malformed input (one U+FFFD per ill-formed sequence
+    * instead of per maximal subpart) and on letters newer than the JDK's
+    * Unicode version. Either way the result is valid UTF-8. */
+  private def sparkLower(text: UTF8String): UTF8String =
+    CollationSupport.Lower.exec(text, CollationFactory.UTF8_BINARY_COLLATION_ID,
+      SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED))
+
+  /** Word n-grams of a document in order — [[sparkLower]], split on runs
+    * of [[isWs]] bytes, empties dropped, `n` consecutive tokens joined by
+    * one space; with `distinct`, only each gram's first occurrence. One
+    * pass over the lowercased bytes, which are valid UTF-8, so every gram
+    * equals the `split(lower(text), "\\s+")` form byte for byte, malformed
+    * input included. All grams are views into one shared buffer. */
+  private def gramsOf(text: UTF8String, n: Int, distinct: Boolean): Array[UTF8String] = {
+    val b = sparkLower(text).getBytes
+    val starts = new Array[Int](b.length / 2 + 1)
+    val ends = new Array[Int](b.length / 2 + 1)
+    var nt = 0
     var i = 0
-    while (i <= toks.length - n) {
-      val sb = new java.lang.StringBuilder(32)
+    while (i < b.length) {
+      while (i < b.length && isWs(b(i))) i += 1
+      if (i < b.length) {
+        starts(nt) = i
+        while (i < b.length && !isWs(b(i))) i += 1
+        ends(nt) = i
+        nt += 1
+      }
+    }
+    if (nt < n) return Array.empty
+    val ng = nt - n + 1
+    // gram g spans tokens g..g+n-1: their bytes plus n-1 single spaces
+    val cum = new Array[Long](nt + 1)
+    var t = 0
+    while (t < nt) { cum(t + 1) = cum(t) + ends(t) - starts(t); t += 1 }
+    var total = 0L
+    var g = 0
+    while (g < ng) { total += cum(g + n) - cum(g) + n - 1; g += 1 }
+    val buf = new Array[Byte](total.toInt)
+    val seen = if (distinct) new java.util.HashSet[UTF8String](ng * 2) else null
+    val out = new Array[UTF8String](ng)
+    var o = 0
+    var pos = 0
+    g = 0
+    while (g < ng) {
+      val from = pos
       var j = 0
       while (j < n) {
-        if (j > 0) sb.append(' ')
-        sb.append(toks(i + j))
+        if (j > 0) { buf(pos) = ' '; pos += 1 }
+        val len = ends(g + j) - starts(g + j)
+        System.arraycopy(b, starts(g + j), buf, pos, len)
+        pos += len
         j += 1
       }
-      seen.add(sb.toString)
-      i += 1
+      val gram = UTF8String.fromBytes(buf, from, pos - from)
+      if (seen == null || seen.add(gram)) { out(o) = gram; o += 1 }
+      g += 1
     }
-    val out = new Array[UTF8String](seen.size)
-    val it = seen.iterator()
-    var o = 0
-    while (it.hasNext) { out(o) = UTF8String.fromString(it.next()); o += 1 }
-    out
+    if (o == ng) out else java.util.Arrays.copyOf(out, o)
   }
+
+  /** Distinct word n-gram shingles of one document (first-seen order). */
+  def shingles(text: UTF8String, n: Int): Array[UTF8String] = gramsOf(text, n, distinct = true)
 
   /** k-member MinHash signature straight from the shingle array: one md5
     * per shingle, k affine minima, no intermediate arrays. */
@@ -132,7 +211,7 @@ object NativeExprs {
     val len = grams.numElements()
     var i = 0
     while (i < len) {
-      val h = h32Bytes(grams.getUTF8String(i).getBytes)
+      val h = h32Of(grams.getUTF8String(i))
       var j = 0
       while (j < k) {
         val v = ((2L * j + 1) * h + 12582917L * j) % hashing.AffineP
@@ -144,6 +223,54 @@ object NativeExprs {
     sig
   }
 
+  /** Exact Jaccard of two arrays: `|a ∩ b| / (|a| + |b| − |a ∩ b|)`, with
+    * the intersection counted over DISTINCT elements and lengths taken as
+    * they are (the contract assumes distinct arrays, e.g. shingle sets).
+    * One hash set of the shorter side per pair; each match is removed
+    * from it, so a repeated element on the longer side counts once.
+    * Element equality is `array_intersect`'s: `equals` for types with
+    * proper equals (NaN == NaN, 0.0 != -0.0), the type's ordering
+    * otherwise (binary, nested types); a NULL element is an element.
+    * An empty union reads 0.0. */
+  def jaccardOf(a: ArrayData, b: ArrayData, et: DataType): Double = {
+    val (small, large) = if (a.numElements() <= b.numElements()) (a, b) else (b, a)
+    val elem: (ArrayData, Int) => Any = et match {
+      case _: StringType => (arr, i) => arr.getUTF8String(i) // NULL reads null
+      case _ => (arr, i) => if (arr.isNullAt(i)) null else arr.get(i, et)
+    }
+    var inter = 0
+    if (TypeUtils.typeWithProperEquals(et)) {
+      val set = new java.util.HashSet[Any](small.numElements() * 2)
+      var i = 0
+      while (i < small.numElements()) { set.add(elem(small, i)); i += 1 }
+      i = 0
+      while (i < large.numElements()) { if (set.remove(elem(large, i))) inter += 1; i += 1 }
+    } else {
+      val ord = TypeUtils.getInterpretedOrdering(et)
+      def same(x: Any, y: Any): Boolean =
+        if (x == null || y == null) x == null && y == null else ord.equiv(x, y)
+      val pool = scala.collection.mutable.ArrayBuffer.empty[Any]
+      var i = 0
+      while (i < small.numElements()) {
+        val x = elem(small, i)
+        if (!pool.exists(same(_, x))) pool += x
+        i += 1
+      }
+      i = 0
+      while (i < large.numElements()) {
+        val at = pool.indexWhere(same(_, elem(large, i)))
+        if (at >= 0) { pool.remove(at); inter += 1 }
+        i += 1
+      }
+    }
+    val uni = a.numElements() + b.numElements() - inter
+    if (uni > 0) inter.toDouble / uni else 0.0
+  }
+
+  /** Column: exact Jaccard of two array columns (native, see
+    * [[jaccardOf]]); 0.0 when either side is NULL. */
+  def jaccard(a: Column, b: Column): Column = column(JaccardExpr(expression(a), expression(b)))
+
   /** Column: distinct word n-gram shingles (native). */
   def wordShingles(c: Column, n: Int): Column = column(WordShinglesExpr(expression(c), n))
 
@@ -153,24 +280,8 @@ object NativeExprs {
     * term frequencies, and the compositional form
     * (`transform(sequence(...), i => concat_ws(slice(...)))`) evaluates
     * interpreted per gram — this is one compiled pass per document. */
-  def wordGramsOf(text: UTF8String, n: Int): Array[UTF8String] = {
-    val toks = text.toLowerCase.toString.split("\\s+", -1).filter(_.nonEmpty)
-    if (toks.length < n) return Array.empty
-    val out = new Array[UTF8String](toks.length - n + 1)
-    var i = 0
-    while (i <= toks.length - n) {
-      val sb = new java.lang.StringBuilder(32)
-      var j = 0
-      while (j < n) {
-        if (j > 0) sb.append(' ')
-        sb.append(toks(i + j))
-        j += 1
-      }
-      out(i) = UTF8String.fromString(sb.toString)
-      i += 1
-    }
-    out
-  }
+  def wordGramsOf(text: UTF8String, n: Int): Array[UTF8String] =
+    gramsOf(text, n, distinct = false)
 
   /** Column: word n-grams with multiplicity (native). */
   def wordGrams(c: Column, n: Int): Column = column(WordGramsExpr(expression(c), n))
@@ -189,9 +300,7 @@ object NativeExprs {
     val seen = new java.util.LinkedHashSet[Long](grams.length * 2)
     var i = 0
     while (i < grams.length) {
-      val d = digest.get()
-      d.reset()
-      val h = d.digest(grams(i).getBytes)
+      val h = md5Of(grams(i))
       val h32 = ((h(0) & 0xffL) << 24) | ((h(1) & 0xffL) << 16) |
         ((h(2) & 0xffL) << 8) | (h(3) & 0xffL)
       val h32b = ((h(4) & 0xffL) << 24) | ((h(5) & 0xffL) << 16) |
@@ -353,8 +462,6 @@ object NativeExprs {
   /** Column: fused min-shingle fingerprint (native). */
   def minShingleFp(c: Column, n: Int): Column = column(MinShingleFpExpr(expression(c), n))
 
-  private val WsPattern = java.util.regex.Pattern.compile("\\s+")
-
   /** One tokenize pass over a document → (token count, summed token
     * lengths in code points, per-profile stopword hit counts). The
     * composed form re-splits the text once per signal — a language-ID +
@@ -471,23 +578,21 @@ object NativeExprs {
     * explode+groupBy form costs a full shuffle of every token row. */
   def simhashOf(text: UTF8String, bits: Int): Long = {
     require(bits >= 1 && bits <= 64, s"simhash bits must be in [1, 64], got $bits")
-    val toks = text.toLowerCase.toString.split("\\s+", -1)
+    val toks = lowerTokens(text)
     val votes = new Array[Int](bits)
     var i = 0
     while (i < toks.length) {
-      if (toks(i).nonEmpty) {
-        val utf8 = toks(i).getBytes("UTF-8")
-        val d = digest.get()
-        d.reset()
-        val h = d.digest(utf8)
-        val w0 = ((h(0) & 0xffL) << 24) | ((h(1) & 0xffL) << 16) | ((h(2) & 0xffL) << 8) | (h(3) & 0xffL)
-        val w1 = ((h(4) & 0xffL) << 24) | ((h(5) & 0xffL) << 16) | ((h(6) & 0xffL) << 8) | (h(7) & 0xffL)
-        var j = 0
-        while (j < bits) {
-          val bit = if (j < 32) (w0 >> j) & 1L else (w1 >> (j - 32)) & 1L
-          if (bit == 1L) votes(j) += 1 else votes(j) -= 1
-          j += 1
-        }
+      val utf8 = toks(i).getBytes("UTF-8")
+      val d = digest.get()
+      d.reset()
+      val h = d.digest(utf8)
+      val w0 = ((h(0) & 0xffL) << 24) | ((h(1) & 0xffL) << 16) | ((h(2) & 0xffL) << 8) | (h(3) & 0xffL)
+      val w1 = ((h(4) & 0xffL) << 24) | ((h(5) & 0xffL) << 16) | ((h(6) & 0xffL) << 8) | (h(7) & 0xffL)
+      var j = 0
+      while (j < bits) {
+        val bit = if (j < 32) (w0 >> j) & 1L else (w1 >> (j - 32)) & 1L
+        if (bit == 1L) votes(j) += 1 else votes(j) -= 1
+        j += 1
       }
       i += 1
     }
@@ -503,7 +608,7 @@ object NativeExprs {
     * the HOF composition ([[graft.ops.text.repetitionMassesHof]]) is
     * O(G²) interpreted. */
   def repetitionMassesOf(text: UTF8String, n: Int): (Long, Long) = {
-    val toks = text.toLowerCase.toString.split("\\s+", -1).filter(_.nonEmpty)
+    val toks = lowerTokens(text)
     if (toks.length < n) return (0L, 0L)
     val counts = new java.util.HashMap[String, Integer](toks.length * 2)
     var i = 0
@@ -564,7 +669,7 @@ object NativeExprs {
           i += w
         }
         out.toArray
-      } else u.toLowerCase.toString.split("\\s+", -1).filter(_.nonEmpty)
+      } else lowerTokens(u)
     val sep = if (charMode) "" else " "
     def gramAt(ts: Array[String], i: Int, n: Int): String = {
       val sb = new java.lang.StringBuilder(16)
@@ -674,7 +779,7 @@ object NativeExprs {
     * reference token counts the F-measure downstream must use. */
   def lcsRowOf(cand: UTF8String, ref: UTF8String, maxToks: Int): InternalRow = {
     def toks(u: UTF8String): Array[String] = {
-      val all = u.toLowerCase.toString.split("\\s+", -1).filter(_.nonEmpty)
+      val all = lowerTokens(u)
       if (all.length > maxToks) java.util.Arrays.copyOf(all, maxToks) else all
     }
     val c = toks(cand)
@@ -715,7 +820,7 @@ object NativeExprs {
     * `n`. */
   def editRowOf(cand: UTF8String, ref: UTF8String, maxToks: Int): InternalRow = {
     def toks(u: UTF8String): Array[String] = {
-      val all = u.toLowerCase.toString.split("\\s+", -1).filter(_.nonEmpty)
+      val all = lowerTokens(u)
       if (all.length > maxToks) java.util.Arrays.copyOf(all, maxToks) else all
     }
     val c = toks(cand)
@@ -767,12 +872,10 @@ object NativeExprs {
   def bloomGramHitsOf(
       text: UTF8String, words: Array[Long], n: Int, mBits: Int, k: Int): Long = {
     val grams = shingles(text, n)
-    val d = digest.get()
     var hits = 0L
     var gi = 0
     while (gi < grams.length) {
-      d.reset()
-      val h = d.digest(grams(gi).getBytes)
+      val h = md5Of(grams(gi))
       val h1 = ((h(0) & 0xffL) << 24) | ((h(1) & 0xffL) << 16) |
         ((h(2) & 0xffL) << 8) | (h(3) & 0xffL)
       val h2 = ((h(4) & 0xffL) << 24) | ((h(5) & 0xffL) << 16) |
@@ -812,7 +915,7 @@ object NativeExprs {
     * equal in NativeExprsSpec. */
   def termSetHitsOf(text: UTF8String, set: java.util.HashSet[String],
       lengths: Array[Int]): Long = {
-    val toks = text.toLowerCase.toString.split("\\s+", -1).filter(_.nonEmpty)
+    val toks = lowerTokens(text)
     var hits = 0L
     var li = 0
     while (li < lengths.length) {
@@ -859,7 +962,7 @@ object NativeExprs {
     if (grams.length == 0) return Array.empty
     val hs = new Array[Long](grams.length)
     var i = 0
-    while (i < grams.length) { hs(i) = h32Bytes(grams(i).getBytes); i += 1 }
+    while (i < grams.length) { hs(i) = h32Of(grams(i)); i += 1 }
     if (hs.length < w) {
       var m = hs(0); i = 1
       while (i < hs.length) { if (hs(i) < m) m = hs(i); i += 1 }
@@ -895,9 +998,7 @@ object NativeExprs {
     * Bit-identical to the compositional twin (same digest bytes, same
     * position arithmetic) — asserted in NativeExprsSpec. */
   def bloomContainsOf(v: UTF8String, words: Array[Long], mBits: Int, k: Int): Boolean = {
-    val d = digest.get()
-    d.reset()
-    val h = d.digest(v.getBytes)
+    val h = md5Of(v)
     val h1 = ((h(0) & 0xffL) << 24) | ((h(1) & 0xffL) << 16) |
       ((h(2) & 0xffL) << 8) | (h(3) & 0xffL)
     val h2 = ((h(4) & 0xffL) << 24) | ((h(5) & 0xffL) << 16) |
@@ -1115,6 +1216,7 @@ case class VecHammingExpr(left: Expression, right: Expression) extends VecBinary
 
 case class WordShinglesExpr(child: Expression, n: Int)
     extends UnaryExpression with CodegenFallback {
+  require(n >= 1, s"graft: word_shingles needs n >= 1, got $n")
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "word_shingles"
   override protected def nullSafeEval(input: Any): Any =
@@ -1124,8 +1226,38 @@ case class WordShinglesExpr(child: Expression, n: Int)
     copy(child = newChild)
 }
 
+/** See [[NativeExprs.jaccardOf]]. Never NULL: a NULL side reads 0.0, as
+  * an empty union does. Both sides must share one orderable element
+  * type. */
+case class JaccardExpr(left: Expression, right: Expression)
+    extends BinaryExpression with CodegenFallback {
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = false
+  override def prettyName: String = "jaccard"
+  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
+    case (ArrayType(a, _), ArrayType(b, _))
+        if DataType.equalsStructurally(a, b, ignoreNullability = true) &&
+          RowOrdering.isOrderable(a) =>
+      TypeCheckResult.TypeCheckSuccess
+    case (l, r) => TypeCheckResult.TypeCheckFailure(
+      s"graft: jaccard needs two arrays of one orderable element type, got " +
+        s"${l.simpleString} and ${r.simpleString}")
+  }
+  @transient private lazy val et = left.dataType.asInstanceOf[ArrayType].elementType
+  override def eval(input: InternalRow): Any = {
+    val a = left.eval(input)
+    val b = if (a == null) null else right.eval(input)
+    if (b == null) 0.0
+    else NativeExprs.jaccardOf(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], et)
+  }
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): JaccardExpr =
+    copy(left = newLeft, right = newRight)
+}
+
 case class WordGramsExpr(child: Expression, n: Int)
     extends UnaryExpression with CodegenFallback {
+  require(n >= 1, s"graft: word_grams needs n >= 1, got $n")
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "word_grams"
   override protected def nullSafeEval(input: Any): Any =
@@ -1516,20 +1648,18 @@ case class BpeEncodeExpr(child: Expression, rules: IndexedSeq[(String, String)])
       (UTF8String.fromString(l), UTF8String.fromString(r), UTF8String.fromString(l + r))
     }.toArray
   override protected def nullSafeEval(input: Any): Any = {
-    val toks = input.asInstanceOf[UTF8String].toLowerCase.toString.split("\\s+", -1)
+    val toks = NativeExprs.lowerTokens(input.asInstanceOf[UTF8String])
     val out = new scala.collection.mutable.ArrayBuffer[AnyRef]()
     var t = 0
     while (t < toks.length) {
-      if (toks(t).nonEmpty) {
-        var syms = NativeExprs.codePointsOf(toks(t))
-        var j = 0
-        while (j < mat.length) {
-          val (l, r, lr) = mat(j)
-          syms = NativeExprs.bpeMergePassOf(syms, l, r, lr)
-          j += 1
-        }
-        out ++= syms
+      var syms = NativeExprs.codePointsOf(toks(t))
+      var j = 0
+      while (j < mat.length) {
+        val (l, r, lr) = mat(j)
+        syms = NativeExprs.bpeMergePassOf(syms, l, r, lr)
+        j += 1
       }
+      out ++= syms
       t += 1
     }
     new GenericArrayData(out.toArray)
@@ -1557,54 +1687,51 @@ case class UnigramSegmentExpr(
     m
   }
   override protected def nullSafeEval(input: Any): Any = {
-    val toks = input.asInstanceOf[UTF8String].toLowerCase.toString
-      .split("\\s+", -1)
+    val toks = NativeExprs.lowerTokens(input.asInstanceOf[UTF8String])
     val out = new scala.collection.mutable.ArrayBuffer[AnyRef]()
     var t = 0
     while (t < toks.length) {
-      if (toks(t).nonEmpty) {
-        val cps = NativeExprs.codePointsOf(toks(t))
-          .map(_.asInstanceOf[UTF8String].toString)
-        val n = cps.length
-        val best = Array.fill(n + 1)(Long.MinValue)
-        val pickL = new Array[Int](n + 1)
-        best(0) = 0L
-        var i = 1
-        while (i <= n) {
-          var l = 1
-          val lMax = math.min(maxPieceLen, i)
-          while (l <= lMax) {
-            val prev = best(i - l)
-            if (prev != Long.MinValue) {
-              val piece = if (l == 1) cps(i - 1)
-                else cps.slice(i - l, i).mkString
-              val sc = scoreOf.get(piece)
-              val scl: Long =
-                if (sc != null) sc.longValue()
-                else if (l == 1) unkScoreQ6
-                else Long.MinValue
-              if (scl != Long.MinValue) {
-                val cand = prev + scl
-                if (cand > best(i) || (cand == best(i) && l > pickL(i))) {
-                  best(i) = cand
-                  pickL(i) = l
-                }
+      val cps = NativeExprs.codePointsOf(toks(t))
+        .map(_.asInstanceOf[UTF8String].toString)
+      val n = cps.length
+      val best = Array.fill(n + 1)(Long.MinValue)
+      val pickL = new Array[Int](n + 1)
+      best(0) = 0L
+      var i = 1
+      while (i <= n) {
+        var l = 1
+        val lMax = math.min(maxPieceLen, i)
+        while (l <= lMax) {
+          val prev = best(i - l)
+          if (prev != Long.MinValue) {
+            val piece = if (l == 1) cps(i - 1)
+              else cps.slice(i - l, i).mkString
+            val sc = scoreOf.get(piece)
+            val scl: Long =
+              if (sc != null) sc.longValue()
+              else if (l == 1) unkScoreQ6
+              else Long.MinValue
+            if (scl != Long.MinValue) {
+              val cand = prev + scl
+              if (cand > best(i) || (cand == best(i) && l > pickL(i))) {
+                best(i) = cand
+                pickL(i) = l
               }
             }
-            l += 1
           }
-          i += 1
+          l += 1
         }
-        val segs = new scala.collection.mutable.ArrayBuffer[AnyRef]()
-        var pos = n
-        while (pos > 0) {
-          val l = pickL(pos)
-          segs += UTF8String.fromString(
-            if (l == 1) cps(pos - 1) else cps.slice(pos - l, pos).mkString)
-          pos -= l
-        }
-        out ++= segs.reverse
+        i += 1
       }
+      val segs = new scala.collection.mutable.ArrayBuffer[AnyRef]()
+      var pos = n
+      while (pos > 0) {
+        val l = pickL(pos)
+        segs += UTF8String.fromString(
+          if (l == 1) cps(pos - 1) else cps.slice(pos - l, pos).mkString)
+        pos -= l
+      }
+      out ++= segs.reverse
       t += 1
     }
     new GenericArrayData(out.toArray)
@@ -1733,7 +1860,7 @@ case class H32Expr(child: Expression) extends UnaryExpression with CodegenFallba
   override def dataType: DataType = LongType
   override def prettyName: String = "h32_native"
   override protected def nullSafeEval(input: Any): Any =
-    NativeExprs.h32Bytes(input.asInstanceOf[UTF8String].getBytes)
+    NativeExprs.h32Of(input.asInstanceOf[UTF8String])
   override protected def withNewChildInternal(newChild: Expression): H32Expr =
     copy(child = newChild)
 }

@@ -66,18 +66,13 @@ object dedup {
       .select(struct(col("_ep_a").as("id_a"), col("_ep_b").as("id_b"))
         .as("p"))
 
-  /** Exact Jaccard similarity of two (already-distinct) string-array
-    * columns: |a ∩ b| / |a ∪ b|. */
-  def jaccard(a: Column, b: Column): Column = {
-    // |a ∪ b| = |a| + |b| − |a ∩ b| for the distinct arrays this
-    // contract requires — one hash-set build per pair instead of the
-    // three that literal intersect+union(×2 via the zero guard) cost;
-    // the rerank joins evaluate this per candidate pair, so it's the
-    // single hottest scalar in the dedup family
-    val inter = size(array_intersect(a, b))
-    val uni = size(a) + size(b) - inter
-    when(uni > 0, inter.cast("double") / uni).otherwise(lit(0.0))
-  }
+  /** Exact Jaccard similarity of two (already-distinct) array columns:
+    * |a ∩ b| / |a ∪ b|, 0.0 when the union is empty or either side is
+    * NULL. One native kernel, one hash set per pair — the rerank joins
+    * evaluate this per candidate pair, so it is the hottest scalar in the
+    * dedup family (see [[graft.functions.NativeExprs.jaccardOf]]). */
+  def jaccard(a: Column, b: Column): Column =
+    graft.functions.NativeExprs.jaccard(a, b)
 
   // ---- exact dedup -----------------------------------------------------
 
@@ -179,16 +174,37 @@ object dedup {
     array((0 until k).map(j =>
       array_min(transform(baseHashes, h => hashing.affine(h, j)))): _*)
 
+  /** `df.where(cond).select(keep ++ fields)` where `cond` tests a column
+    * that an expensive kernel computes in `df`'s own projection. A plain
+    * `where` there is pushed below that projection (PushPredicateThroughNonJoin
+    * substitutes the alias, and a join below takes it as its condition),
+    * so the kernel runs once for the filter and once more for the
+    * projection. Inside an `inline` generator, which no filter is pushed
+    * through, the test reads the computed column: one evaluation per row. */
+  private def whereOnce(df: DataFrame, keep: Seq[Column], cond: Column,
+      fields: Column*): DataFrame =
+    df.select(keep :+ inline(when(cond, array(struct(fields: _*)))): _*)
+
   /** Documents with their shingle sets and MinHash signatures. Rows with
     * no shingles (fewer than `n` tokens) are excluded — they have no
-    * signature. Shingling and signing run as one native fused kernel per
-    * row: one md5 per distinct shingle, k affine minima, no intermediate
-    * arrays (see [[graft.functions.NativeExprs]]). */
+    * signature. Shingling and signing run as native kernels: one md5 per
+    * distinct shingle, k affine minima (see
+    * [[graft.functions.NativeExprs]]); each row is shingled once
+    * ([[whereOnce]]). */
   def minhashed(df: DataFrame, textCol: String, idCol: String,
       k: Int, n: Int = 3): DataFrame =
-    df.select(col(idCol), wordShingles(col(textCol), n).as("grams"))
-      .where(size(col("grams")) > 0)
-      .withColumn("sig", graft.functions.NativeExprs.minhashSig(col("grams"), k))
+    whereOnce(df.select(col(idCol), wordShingles(col(textCol), n).as("_g")),
+      Seq(col(idCol)), size(col("_g")) > 0, col("_g").as("grams"),
+      graft.functions.NativeExprs.minhashSig(col("_g"), k).as("sig"))
+
+  /** Exact-Jaccard rerank of joined candidate pairs: `(a, b, jacc)` for
+    * the rows of `pairs` whose `grams_a`/`grams_b` reach `threshold`, the
+    * kernel evaluated once per pair ([[whereOnce]]). */
+  private def jaccardRerank(pairs: DataFrame, a: String, b: String,
+      threshold: Double): DataFrame =
+    whereOnce(pairs.select(col(a), col(b),
+        jaccard(col("grams_a"), col("grams_b")).as("_j")),
+      Seq(col(a), col(b)), col("_j") >= threshold, col("_j").as("jacc"))
 
   /** LSH banding: explode the signature into `bands` rows of
     * `(band_idx, band_key)` where the key concatenates `r = k/bands`
@@ -271,16 +287,15 @@ object dedup {
       // a set-intersection per pair after
       .where(pairFilter.getOrElse(lit(true)))
       .distinct()
-    // The two grams sides broadcast separately in the static plan, but
-    // AQE's runtime stage reuse dedups the identical broadcast subtrees,
-    // so the shingle pipeline builds once — measured, not just read off
-    // the (pre-adaptive) explain, which misleadingly shows two builds.
-    val ga = mh.select(col(idCol).as("id_a"), col("grams").as("grams_a"))
-    val gb = mh.select(col(idCol).as("id_b"), col("grams").as("grams_b"))
-    cands.join(ga, "id_a").join(gb, "id_b")
-      .withColumn("jacc", jaccard(col("grams_a"), col("grams_b")))
-      .where(col("jacc") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jacc"))
+    // The rerank side shingles each document once more (the band side's
+    // shingles are gone once the signature is banded), with no emptiness
+    // filter: only documents with a signature can be candidates. `ga` and
+    // `gb` are one subtree, so exchange reuse evaluates it once — two
+    // word_shingles evaluations per document in all (DedupSpec pins it).
+    val grams = df.select(col(idCol), wordShingles(col(textCol), n).as("grams"))
+    val ga = grams.select(col(idCol).as("id_a"), col("grams").as("grams_a"))
+    val gb = grams.select(col(idCol).as("id_b"), col("grams").as("grams_b"))
+    jaccardRerank(cands.join(ga, "id_a").join(gb, "id_b"), "id_a", "id_b", threshold)
   }
 
   /** Cross-document repeated token SPANS — the span-level (not whole-doc)
@@ -1361,10 +1376,8 @@ object dedup {
       .distinct()
     val ga = corpusSigs.select(col(idCol).as("corpus_id"), col("grams").as("grams_a"))
     val gb = bm.select(col(idCol).as("new_id"), col("grams").as("grams_b"))
-    cands.join(ga, "corpus_id").join(broadcast(gb), "new_id")
-      .withColumn("jacc", jaccard(col("grams_a"), col("grams_b")))
-      .where(col("jacc") >= threshold)
-      .select(col("corpus_id"), col("new_id"), col("jacc"))
+    jaccardRerank(cands.join(ga, "corpus_id").join(broadcast(gb), "new_id"),
+      "corpus_id", "new_id", threshold)
   }
 
   /** Semantic deduplication (SemDeDup, Abbas et al. 2023): cluster the
@@ -1596,10 +1609,8 @@ object dedup {
     val ga = s.read.parquet(s"$indexPath/sigs")
       .select(col("id").as("corpus_id"), col("grams").as("grams_a"))
     val gb = bm.select(col(idCol).as("new_id"), col("grams").as("grams_b"))
-    cands.join(ga, Seq("corpus_id")).join(broadcast(gb), Seq("new_id"))
-      .withColumn("jacc", jaccard(col("grams_a"), col("grams_b")))
-      .where(col("jacc") >= threshold)
-      .select(col("corpus_id"), col("new_id"), col("jacc"))
+    jaccardRerank(cands.join(ga, Seq("corpus_id")).join(broadcast(gb), Seq("new_id")),
+      "corpus_id", "new_id", threshold)
   }
 
   /** Per-document n-gram NOVELTY against the corpus in id order — the

@@ -30,6 +30,35 @@ class DedupSpec extends SparkSpec {
     assert(math.abs(df.head().getDouble(0) - 0.5) < 1e-12) // 2 of 4
   }
 
+  test("jaccard edge semantics: empty and NULL sides, non-string elements, duplicates") {
+    // |a ∩ b| / (|a| + |b| − |a ∩ b|) with the intersection taken over
+    // distinct elements, NULL and empty-union cases read 0.0 (never NULL)
+    def j(a: String, b: String): Double =
+      spark.range(1).select(dedup.jaccard(expr(a), expr(b)).as("j"))
+        .head().getDouble(0)
+    val es = "cast(array() as array<string>)"
+    val ns = "cast(null as array<string>)"
+    assert(j(es, es) == 0.0)
+    assert(j(es, "array('a', 'b')") == 0.0)
+    assert(j("array('a', 'b')", es) == 0.0)
+    assert(j(ns, "array('a', 'b')") == 0.0)
+    assert(j("array('a', 'b')", ns) == 0.0)
+    assert(j(ns, ns) == 0.0)
+    assert(j(ns, es) == 0.0)
+    assert(j("array('a', 'b')", "array('b', 'a')") == 1.0)
+    // non-string element types
+    assert(j("array(1L, 2L, 3L)", "array(2L, 3L, 4L)") == 0.5)
+    assert(j("array(1, 2)", "array(3)") == 0.0)
+    assert(j("array(cast('NaN' as double), 1.0D)", "array(cast('NaN' as double))") == 0.5)
+    assert(j("array(0.0D)", "array(-0.0D)") == 0.0)
+    assert(j("array(X'01', X'02')", "array(X'02')") == 0.5)
+    assert(j("array(array(1), array(2))", "array(array(2), array(3))") == 1.0 / 3)
+    // a NULL element is an element; duplicates count in |a| + |b|
+    assert(j("array(cast(null as string), 'a')", "array(cast(null as string))") == 0.5)
+    assert(j("array('a', 'a')", "array('a')") == 0.5)
+    assert(j("array('a', 'a', 'b')", "array('a', 'a')") == 1.0 / 4)
+  }
+
   test("exact dedup groups duplicates and keeps the lowest id") {
     val groups = dedup.exactGroups(docs, "text", "doc_id")
     assert(groups.count() == 4) // 1&2 merge
@@ -76,6 +105,81 @@ class DedupSpec extends SparkSpec {
     assert(pairs.contains((1L, 2L)))
     assert(pairs.contains((1L, 3L)) && pairs.contains((2L, 3L)))
     assert(!pairs.exists { case (a, b) => a == 4L || b == 4L })
+  }
+
+  /** Plain-Scala MinHash-LSH: shingle sets → NativeExprs.minhash →
+    * band keys → pairs sharing a band → exact Jaccard ≥ threshold. */
+  private def referencePairs(corpus: Seq[(Long, String)], threshold: Double,
+      k: Int, bands: Int, n: Int, keep: (Long, Long) => Boolean): Set[(Long, Long, Double)] = {
+    val sets = corpus.flatMap { case (id, t) =>
+      val toks = t.toLowerCase.split("[ \t\n\u000B\f\r]+").filter(_.nonEmpty)
+      if (toks.length < n) None
+      else Some(id -> toks.sliding(n).map(_.mkString(" ")).toSeq.distinct)
+    }.toMap
+    val r = k / bands
+    val buckets = sets.toSeq.flatMap { case (id, grams) =>
+      val sig = graft.functions.NativeExprs.minhash(
+        new org.apache.spark.sql.catalyst.util.GenericArrayData(
+          grams.map(org.apache.spark.unsafe.types.UTF8String.fromString)), k)
+      (0 until bands).map(b => (b, sig.slice(b * r, b * r + r).mkString("_")) -> id)
+    }.groupBy(_._1).values.map(_.map(_._2).sorted)
+    val cands = buckets.flatMap(ids =>
+      for (a <- ids; b <- ids if a < b && keep(a, b)) yield (a, b)).toSet
+    cands.flatMap { case (a, b) =>
+      val (x, y) = (sets(a).toSet, sets(b).toSet)
+      val inter = (x intersect y).size
+      val jacc = inter.toDouble / (x.size + y.size - inter)
+      if (jacc >= threshold) Some((a, b, jacc)) else None
+    }
+  }
+
+  test("minhashNearDupPairs equals a plain-Scala MinHash-LSH reference on random corpora") {
+    val vocab = Seq("the", "Cat", "sat", "on", "a", "MAT", "dog", "ran", "to", "é", "ß", "x")
+    val ws = Seq(" ", "  ", "\t", "\n", "\r\n", "\u000B", "\f")
+    for (seed <- 1 to 4) {
+      val rnd = new scala.util.Random(seed)
+      def doc(toks: Seq[String]) =
+        toks.map(_ + ws(rnd.nextInt(ws.size))).mkString.trim
+      val bases = Seq.fill(14)(Seq.fill(4 + rnd.nextInt(9))(vocab(rnd.nextInt(vocab.size))))
+      val texts = bases ++ bases.take(8).map(b => b.updated(rnd.nextInt(b.size),
+          vocab(rnd.nextInt(vocab.size)))) ++
+        Seq(Seq("a", "b"), Seq.empty, bases.head)  // too short, empty, exact copy
+      val corpus = texts.zipWithIndex.map { case (t, i) => (i.toLong + 1, doc(t)) }
+      val df = corpus.toDF("doc_id", "text")
+      val (k, bands, n, threshold) =
+        if (seed % 2 == 0) (16, 8, 3, 0.5) else (12, 4, 2, 0.3)
+      val filters: Seq[(Option[org.apache.spark.sql.Column], (Long, Long) => Boolean)] = Seq(
+        (None, (_, _) => true),
+        (Some((col("id_a") + col("id_b")) % 2 === 1), (a, b) => (a + b) % 2 == 1))
+      for ((pf, keep) <- filters) {
+        val got = dedup.minhashNearDupPairs(df, "text", "doc_id", threshold, k, bands, n, pf)
+          .as[(Long, Long, Double)].collect()
+        val want = referencePairs(corpus, threshold, k, bands, n, keep)
+        assert(got.length == got.toSet.size, s"seed $seed: duplicate pairs")
+        assert(got.toSet == want, s"seed $seed, filter ${pf.isDefined}")
+        assert(pf.isDefined || want.nonEmpty, s"seed $seed: the corpus must plant pairs")
+      }
+    }
+  }
+
+  test("minhashNearDupPairs plan: at most two word_shingles evaluations, one jaccard, no array_intersect") {
+    // RDD-backed, so the optimizer cannot fold the kernels over a local relation
+    val rddDocs = spark.sparkContext.parallelize(docs.as[(Long, String)].collect().toSeq, 2)
+      .toDF("doc_id", "text")
+    val pairs = dedup.minhashNearDupPairs(rddDocs, "text", "doc_id", threshold = 0.4)
+    assert(pairs.count() == 3)
+    pairs.collect()
+    // the final adaptive plan only: its tree string also prints the
+    // initial plan, which would count every expression twice
+    val plan = pairs.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val text = plan.toString
+    def count(s: String) = text.sliding(s.length).count(_ == s)
+    assert(count("word_shingles(") <= 2, text)
+    assert(count("array_intersect(") == 0, text)
+    assert(count("jaccard(") == 1, text) // once per pair: not again in a join condition
   }
 
   test("jaccardPairs: exact pair set and hand-computed scores") {

@@ -191,6 +191,45 @@ object GraftProperties extends Properties("graft") {
       (a.isEmpty || jaa == 1.0) && jab == jba && jab >= 0.0 && jab <= 1.0
     }
 
+  // Text spanning the tokenizer's edge cases: every byte `\s` matches, in
+  // runs; upper case and non-ASCII letters; U+00A0 and U+2003, which `\s`
+  // does not split; U+2C2F, a capital newer than Java 17's Unicode
+  // tables; a small vocabulary so grams repeat within a document.
+  private val asciiWs = Seq(" ", "\t", "\n", "\u000B", "\f", "\r")
+  private val genShingleText: Gen[String] = {
+    val word = Gen.chooseNum(1, 3).flatMap(k => Gen.listOfN(k, Gen.oneOf(
+      "a", "b", "Ab", "CAT", "é", "Ä", "ß", "Σ", "ж", "İ", "x y", " ",
+      "1", "😀", "Ⱟ")).map(_.mkString))
+    val wsRun = Gen.chooseNum(1, 3).flatMap(k => Gen.listOfN(k, Gen.oneOf(asciiWs)))
+      .map(_.mkString)
+    for {
+      lead <- Gen.oneOf("", " ", "\t\n")
+      parts <- Gen.chooseNum(0, 12).flatMap(k => Gen.listOfN(k, Gen.zip(word, wsRun)))
+      last <- Gen.oneOf("", "a", "B")
+    } yield lead + parts.map { case (w, s) => w + s }.mkString + last
+  }
+  // Arbitrary bytes (malformed UTF-8 included) over whitespace and letters.
+  private val genShingleBytes: Gen[Array[Byte]] = Gen.chooseNum(0, 24).flatMap(k =>
+    Gen.listOfN(k, Gen.frequency(
+      3 -> Gen.oneOf(asciiWs.map(_.head.toByte)),
+      3 -> Gen.oneOf('a'.toByte, 'B'.toByte),
+      4 -> Gen.choose(Byte.MinValue, Byte.MaxValue))).map(_.toArray))
+
+  property("byte-level word_shingles = wordShinglesHof, any text, n in {1, 2, 3, 8}") =
+    forAllNoShrink(Gen.listOfN(12, genShingleText), Gen.listOfN(8, genShingleBytes)) {
+      (texts, raws) =>
+        // malformed UTF-8 reaches the kernel through cast(binary as string)
+        val df = (Seq(Array.emptyByteArray) ++ texts.map(_.getBytes("UTF-8")) ++ raws)
+          .toDF("raw").select(col("raw").cast("string").as("t"))
+        Seq(1, 2, 3, 8).forall { n =>
+          df.where(!(dedup.wordShingles(col("t"), n) <=> dedup.wordShinglesHof(col("t"), n)))
+            .count() == 0
+        } &&
+          // NULL text has no shingle array (the HOF form reads it as empty)
+          Seq(Option.empty[String]).toDF("t")
+            .select(dedup.wordShingles(col("t"), 3)).head().isNullAt(0)
+    }
+
   private val genGroupedVals: Gen[Seq[(String, Double)]] =
     Gen.chooseNum(1, 30).flatMap(n => Gen.listOfN(n,
       Gen.zip(Gen.oneOf("a", "b", "c"), Gen.choose(-100.0, 100.0))).map(_.toSeq))
