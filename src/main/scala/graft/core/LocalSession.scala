@@ -2,8 +2,8 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** The one local SparkSession every main builds, so `PlanDump`, `Explain`
-  * and the other tools plan exactly what `Bench` times and `Verify`
+/** The one local SparkSession every main builds, so `PlanDump` and the
+  * other tools plan exactly what `Bench` times and `Verify`
   * checks: `local[SPARK_GRAFT_CPUS]` (default 4), the determinism pins
   * ([[EnvConf.PinnedKeys]]), the AQE coalescing posture and the
   * `SPARK_GRAFT_CONF` passthrough. */

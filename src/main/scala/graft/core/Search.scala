@@ -52,11 +52,12 @@ final case class VecStore(
     * (ref: meta.rs:723-724). Index-internal columns (precomputed norm,
     * LSH partition bucket, PQ codes, persisted JL projection) are not
     * user metadata and stay out of results. */
-  private[core] def metaCols: Seq[String] =
+  private[core] def metaCols: Seq[String] = {
+    import graft.index.VecIndex._
+    val internal = Set(LshBucketCol, IvfClusterCol, PqCodeCol, RpVecCol)
     df.columns.filterNot(c =>
-      c == idCol || c == vecCol || invNormCol.contains(c) ||
-        c == "lsh_bucket" || c == "cluster_id" || c == "pq_code" ||
-        c == "rp_vec").sorted.toSeq
+      c == idCol || c == vecCol || invNormCol.contains(c) || internal(c)).sorted.toSeq
+  }
 }
 
 /** Lazy, immutable query plan — the Spark analog of `MetaQueryPlan`

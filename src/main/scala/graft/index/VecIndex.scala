@@ -3,7 +3,7 @@ package graft.index
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.VecStore
+import graft.core.{IndexMeta, VecStore}
 import graft.functions.vectors
 
 /** Index build — the Spark-native `MetaStoreBuilder::build`
@@ -46,6 +46,9 @@ object VecIndex {
   /** Name of the persisted JL random-projection column. */
   val RpVecCol = "rp_vec"
 
+  /** Name of the persisted PQ code column. */
+  val PqCodeCol = "pq_code"
+
   /** Directory (underscore-prefixed → invisible to parquet scans of the
     * index) holding the build-time [[graft.core.IndexMeta]]. */
   private val MetaDir = "_graft_meta"
@@ -75,7 +78,12 @@ object VecIndex {
         * keeps row groups fine-grained enough to prune well while staying
         * large enough for vectorized scans. */
       rowGroupBytes: Long = 16L * 1024 * 1024,
-      /** Output files; at cluster scale set ≈ dataset_bytes / 512 MB. */
+      /** Output files of a `sortBy`/`zorderBy` layout (the range-
+        * partition count; default: the default parallelism), and the
+        * file count [[compact]] coalesces a flat, unsorted layout to. A
+        * [[build]] with neither sort ignores it: its file count follows
+        * the input's partitioning. At cluster scale set ≈
+        * dataset_bytes / 512 MB. */
       numFiles: Option[Int] = None,
       /** Z-order layout: sort by the Morton interleave of these two
         * NON-NEGATIVE integer columns instead of a lexicographic
@@ -114,27 +122,6 @@ object VecIndex {
         * `inv_norm`, never recomputed per scan. */
       rpDims: Option[Int] = None)
 
-  /** Apply the bloom-filter writer options of `opts` (shared by [[build]]
-    * and [[append]]): per-column enable/ndv/fpp, plus the global size
-    * ceiling — parquet-mr keys `max.bytes` off the writer, not the
-    * column, so `bloomMaxBytes` clamps every bloom column at once. */
-  private def withBloomOptions(
-      w: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row],
-      opts: BuildOptions): org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] = {
-    var writer = w
-    opts.bloomCols.foreach { c =>
-      writer = writer
-        .option(s"parquet.bloom.filter.enabled#$c", "true")
-        .option(s"parquet.bloom.filter.expected.ndv#$c", opts.bloomNdv.toString)
-      opts.bloomFpp.foreach(f =>
-        writer = writer.option(s"parquet.bloom.filter.fpp#$c", f.toString))
-    }
-    if (opts.bloomCols.nonEmpty)
-      opts.bloomMaxBytes.foreach(b =>
-        writer = writer.option("parquet.bloom.filter.max.bytes", b.toString))
-    writer
-  }
-
   /** Reference `MetaBuildStats` (meta.rs:844-852): rows, dim, chunk count
     * (row groups here), files, wall time. */
   final case class BuildStats(
@@ -161,48 +148,9 @@ object VecIndex {
       vecCol: String = "embedding",
       opts: BuildOptions = BuildOptions()): (VecStore, BuildStats) = {
     val t0 = System.nanoTime()
-
-    // Validate uniform dimension up front (reference validates every
-    // vector at ingest, vec.rs:357-372) — one tiny agg, not a collect of
-    // the data itself.
-    val dims = df.select(size(col(vecCol)).as("d")).where(col("d").isNotNull)
-      .agg(min("d").as("lo"), max("d").as("hi"), count(lit(1)).as("n")).head()
-    // Empty store (or every embedding NULL) → min/max aggregate to NULL;
-    // fail with a descriptive ingest error like the reference's explicit
-    // validation (vec.rs:357-372), not an NPE on getInt.
-    require(!dims.isNullAt(0),
-      s"graft: cannot build index at '$path': input has no rows with a " +
-        s"non-NULL '$vecCol' vector")
-    val (lo, hi, n) = (dims.getInt(0), dims.getInt(1), dims.getLong(2))
-    require(lo == hi, s"embedding dimension must be uniform, found [$lo, $hi]")
-
-    require(!(opts.lshBits.isDefined && opts.ivfCentroids.isDefined),
-      "graft: lshBits and ivfCentroids are mutually exclusive partition layouts")
-
-    val withInv = df.withColumn(InvNormCol, vectors.invNorm(col(vecCol)))
-    // rpDims = 0 would "succeed" into a degenerate index (empty rp_vec
-    // arrays, empty persisted matrix) whose first rpSearch dies on a
-    // bare mat.head — keep the error at the build layer, descriptive
-    opts.rpDims.foreach(d => require(d >= 1,
-      s"graft: BuildOptions.rpDims must be >= 1, got $d"))
-    val rpMat = opts.rpDims.map(dOut => vectors.rpMatrix(lo, dOut))
-    val withRp = rpMat match {
-      case Some(mat) =>
-        withInv.withColumn(RpVecCol, vectors.projectWith(col(vecCol), mat))
-      case None => withInv
-    }
-    val withPq = opts.pqCodebooks match {
-      case Some(cbs) => graft.ops.quant.pqEncode(withRp, cbs, vecCol)
-      case None => withRp
-    }
-    val withBucket = (opts.lshBits, opts.ivfCentroids) match {
-      case (Some(bits), _) =>
-        withPq.withColumn(LshBucketCol,
-          graft.ops.ann.lshSignature(col(vecCol), t = 0, nbits = bits, dim = lo))
-      case (_, Some(cents)) =>
-        graft.ops.ann.ivfAssign(withPq, cents, vecCol)
-      case _ => withPq
-    }
+    val (dim, n) = uniformDim(df, vecCol, s"cannot build index at '$path'")
+    val meta = metaOf(opts, dim)
+    val withLayout = withLayoutCols(df, meta, vecCol, dim)
 
     // Range-partition + sort so zonemaps are tight per row group AND per
     // file. repartitionByRange is a full shuffle — an index build is a
@@ -213,26 +161,21 @@ object VecIndex {
     val laidOut = (opts.sortBy, opts.zorderBy) match {
       case (Nil, Some((a, b))) =>
         val z = zorder.zValue(col(a), col(b))
-        withBucket.repartitionByRange(parts, z).sortWithinPartitions(z)
+        withLayout.repartitionByRange(parts, z).sortWithinPartitions(z)
       case (Nil, None) if opts.ivfCentroids.isDefined =>
-        withBucket.repartition(col(IvfClusterCol))
-      case (Nil, None) => withBucket
+        withLayout.repartition(col(IvfClusterCol))
+      case (Nil, None) => withLayout
       case (cols, _) =>
-        withBucket.repartitionByRange(parts, cols.map(col): _*)
+        withLayout.repartitionByRange(parts, cols.map(col): _*)
           .sortWithinPartitions(cols.map(col): _*)
     }
 
-    var writer = withBloomOptions(laidOut.write.mode(SaveMode.Overwrite)
-      .option("parquet.block.size", opts.rowGroupBytes.toString), opts)
-    opts.lshBits.foreach(_ => writer = writer.partitionBy(LshBucketCol))
-    opts.ivfCentroids.foreach(_ => writer = writer.partitionBy(IvfClusterCol))
-    writer.parquet(path)
-    writeMetaValues(df.sparkSession, path, opts.lshBits, 0, opts.ivfCentroids,
-      opts.pqCodebooks, rpMat)
+    writeLayout(laidOut, SaveMode.Overwrite, path, meta, opts)
+    writeMetaValues(df.sparkSession, path, meta)
 
     val store = load(df.sparkSession, path, idCol, vecCol)
     val (files, groups) = countRowGroups(df.sparkSession, path)
-    (store, BuildStats(n, lo, groups, files, (System.nanoTime() - t0) / 1000000, path))
+    (store, BuildStats(n, dim, groups, files, (System.nanoTime() - t0) / 1000000, path))
   }
 
   /** Append rows to an existing index (the reference's roadmap mutability
@@ -246,7 +189,9 @@ object VecIndex {
     * keeps working, though range locality across old/new segments decays
     * with churn — re-run [[build]] to compact/re-sort when it matters.
     * `sortBy`/bloom/row-group options apply to the NEW files only.
-    * Dimension is validated against the stored vectors up front. */
+    * Dimension is validated against the stored vectors up front; an
+    * index emptied by [[delete]] takes the batch's dimension, checked
+    * against the one its persisted projection or centroids fix. */
   def append(
       df: DataFrame,
       path: String,
@@ -255,60 +200,109 @@ object VecIndex {
       opts: BuildOptions = BuildOptions()): (VecStore, BuildStats) = {
     val t0 = System.nanoTime()
     val spark = df.sparkSession
-    val meta = readMeta(spark, path)
+    val meta = readMeta(spark, path).getOrElse(IndexMeta())
     val existing = spark.read.parquet(path)
 
-    val dims = df.select(size(col(vecCol)).as("d")).where(col("d").isNotNull)
-      .agg(min("d").as("lo"), max("d").as("hi"), count(lit(1)).as("n")).head()
-    require(!dims.isNullAt(0),
-      s"graft: cannot append to '$path': input has no rows with a " +
-        s"non-NULL '$vecCol' vector")
-    val (lo, hi, n) = (dims.getInt(0), dims.getInt(1), dims.getLong(2))
-    require(lo == hi, s"embedding dimension must be uniform, found [$lo, $hi]")
+    val (dim, n) = uniformDim(df, vecCol, s"cannot append to '$path'")
     val storedDim = existing.select(size(col(vecCol)).as("d"))
-      .where(col("d").isNotNull).limit(1).head().getInt(0)
-    require(lo == storedDim,
-      s"graft: appended dimension $lo != stored dimension $storedDim at '$path'")
+      .where(col("d").isNotNull).limit(1).collect()
+      .headOption.map(_.getInt(0)).orElse(metaDim(meta))
+    storedDim.foreach(sd => require(dim == sd,
+      s"graft: appended dimension $dim != stored dimension $sd at '$path'"))
 
-    val withInv = df.withColumn(InvNormCol, vectors.invNorm(col(vecCol)))
-    // Derived columns come from the PERSISTED build config (matrix,
-    // codebooks, bucket params) — never caller options — so appended rows
-    // land with the same layout semantics the original build wrote.
-    val withRp = meta.flatMap(_.rpMatrix) match {
-      case Some(mat) =>
-        withInv.withColumn(RpVecCol, vectors.projectWith(col(vecCol), mat))
-      case None => withInv
-    }
-    val withPq = meta.flatMap(_.pqCodebooks) match {
-      case Some(cbs) => graft.ops.quant.pqEncode(withRp, cbs, vecCol)
-      case None => withRp
-    }
-    val withBucket = meta match {
-      case Some(m) if m.lshBits.isDefined =>
-        withPq.withColumn(LshBucketCol,
-          graft.ops.ann.lshSignature(col(vecCol), t = m.lshTable,
-            nbits = m.lshBits.get, dim = lo))
-      case Some(m) if m.ivfCentroids.isDefined =>
-        graft.ops.ann.ivfAssign(withPq, m.ivfCentroids.get, vecCol)
-      case _ => withPq
-    }
     // Column order must match the existing data files for parquet append.
-    val ordered = withBucket.select(existing.columns.toIndexedSeq.map(col): _*)
+    val ordered = withLayoutCols(df, meta, vecCol, dim)
+      .select(existing.columns.toIndexedSeq.map(col): _*)
     val sorted =
       if (opts.sortBy.nonEmpty) ordered.sortWithinPartitions(opts.sortBy.map(col): _*)
       else ordered
-
-    var writer = withBloomOptions(sorted.write.mode(SaveMode.Append)
-      .option("parquet.block.size", opts.rowGroupBytes.toString), opts)
-    meta.foreach { m =>
-      if (m.lshBits.isDefined) writer = writer.partitionBy(LshBucketCol)
-      if (m.ivfCentroids.isDefined) writer = writer.partitionBy(IvfClusterCol)
-    }
-    writer.parquet(path)
+    writeLayout(sorted, SaveMode.Append, path, meta, opts)
 
     val store = load(spark, path, idCol, vecCol)
     val (files, groups) = countRowGroups(spark, path)
-    (store, BuildStats(n, lo, groups, files, (System.nanoTime() - t0) / 1000000, path))
+    (store, BuildStats(n, dim, groups, files, (System.nanoTime() - t0) / 1000000, path))
+  }
+
+  /** The one uniform dimension of `df`'s non-NULL vectors, and how many
+    * there are. The reference validates every vector at ingest
+    * (vec.rs:357-372); here one tiny agg, not a collect of the data. An
+    * empty input (or every embedding NULL) aggregates min/max to NULL and
+    * fails with a descriptive error naming `what`, not an NPE on getInt. */
+  private def uniformDim(df: DataFrame, vecCol: String, what: String): (Int, Long) = {
+    val dims = df.select(size(col(vecCol)).as("d")).where(col("d").isNotNull)
+      .agg(min("d").as("lo"), max("d").as("hi"), count(lit(1)).as("n")).head()
+    require(!dims.isNullAt(0),
+      s"graft: $what: input has no rows with a non-NULL '$vecCol' vector")
+    val (lo, hi) = (dims.getInt(0), dims.getInt(1))
+    require(lo == hi, s"embedding dimension must be uniform, found [$lo, $hi]")
+    (lo, dims.getLong(2))
+  }
+
+  /** The layout a build with `opts` over `dim`-wide vectors persists —
+    * the one translation of [[BuildOptions]] into an [[IndexMeta]]. */
+  private def metaOf(opts: BuildOptions, dim: Int): IndexMeta = {
+    require(!(opts.lshBits.isDefined && opts.ivfCentroids.isDefined),
+      "graft: lshBits and ivfCentroids are mutually exclusive partition layouts")
+    // rpDims = 0 would "succeed" into a degenerate index (empty rp_vec
+    // arrays, empty persisted matrix) whose first rpSearch dies on a
+    // bare mat.head — keep the error at the build layer, descriptive
+    opts.rpDims.foreach(d => require(d >= 1,
+      s"graft: BuildOptions.rpDims must be >= 1, got $d"))
+    IndexMeta(opts.lshBits, lshTable = 0, opts.ivfCentroids, opts.pqCodebooks,
+      opts.rpDims.map(vectors.rpMatrix(dim, _)))
+  }
+
+  /** The vector dimension `meta` itself fixes: the projection's input
+    * width or the centroid length. None for other layouts. */
+  private def metaDim(meta: IndexMeta): Option[Int] =
+    meta.rpMatrix.flatMap(_.headOption).map(_.length)
+      .orElse(meta.ivfCentroids.flatMap(_.headOption).map(_._2.length))
+
+  /** Add the derived columns `meta` describes — `inv_norm`, then `rp_vec`,
+    * `pq_code`, and the `lsh_bucket` or `cluster_id` partition column —
+    * the one place both [[build]] and [[append]] decide an index layout. */
+  private def withLayoutCols(df: DataFrame, meta: IndexMeta, vecCol: String, dim: Int): DataFrame = {
+    val withInv = df.withColumn(InvNormCol, vectors.invNorm(col(vecCol)))
+    val withRp = meta.rpMatrix.fold(withInv)(mat =>
+      withInv.withColumn(RpVecCol, vectors.projectWith(col(vecCol), mat)))
+    val withPq = meta.pqCodebooks.fold(withRp)(cbs =>
+      graft.ops.quant.pqEncode(withRp, cbs, vecCol))
+    (meta.lshBits, meta.ivfCentroids) match {
+      case (Some(bits), _) =>
+        withPq.withColumn(LshBucketCol,
+          graft.ops.ann.lshSignature(col(vecCol), t = meta.lshTable, nbits = bits, dim = dim))
+      case (_, Some(cents)) => graft.ops.ann.ivfAssign(withPq, cents, vecCol)
+      case _ => withPq
+    }
+  }
+
+  /** The directory-partition column of a layout: the LSH bucket or the
+    * IVF cluster id, none for a flat layout. */
+  private def partitionCol(meta: IndexMeta): Option[String] =
+    if (meta.lshBits.isDefined) Some(LshBucketCol)
+    else if (meta.ivfCentroids.isDefined) Some(IvfClusterCol)
+    else None
+
+  /** The one index data writer: row-group size and bloom filters from
+    * `opts`, partition directories from `meta`. Bloom options are per
+    * column (enable/ndv/fpp) plus the global size ceiling — parquet-mr
+    * keys `max.bytes` off the writer, not the column, so `bloomMaxBytes`
+    * clamps every bloom column at once. */
+  private def writeLayout(
+      df: DataFrame, mode: SaveMode, path: String, meta: IndexMeta, opts: BuildOptions): Unit = {
+    var writer = df.write.mode(mode).option("parquet.block.size", opts.rowGroupBytes.toString)
+    opts.bloomCols.foreach { c =>
+      writer = writer
+        .option(s"parquet.bloom.filter.enabled#$c", "true")
+        .option(s"parquet.bloom.filter.expected.ndv#$c", opts.bloomNdv.toString)
+      opts.bloomFpp.foreach(f =>
+        writer = writer.option(s"parquet.bloom.filter.fpp#$c", f.toString))
+    }
+    if (opts.bloomCols.nonEmpty)
+      opts.bloomMaxBytes.foreach(b =>
+        writer = writer.option("parquet.bloom.filter.max.bytes", b.toString))
+    partitionCol(meta).foreach(c => writer = writer.partitionBy(c))
+    writer.parquet(path)
   }
 
   /** Stats returned by [[delete]]: how surgical the rewrite was. */
@@ -331,7 +325,8 @@ object VecIndex {
     * happens BEFORE removal, so a crash mid-delete leaves transient
     * duplicates rather than data loss (re-run the delete to converge —
     * it is idempotent for a pure predicate). SQL three-valued logic:
-    * rows where `pred` is NULL are KEPT, exactly like `DELETE WHERE`. */
+    * rows where `pred` is NULL are KEPT, exactly like `DELETE WHERE`.
+    * Rewritten files get the default [[BuildOptions]] row-group size. */
   def delete(spark: SparkSession, path: String, pred: org.apache.spark.sql.Column): DeleteStats = {
     val t0 = System.nanoTime()
     val df = spark.read.parquet(path)
@@ -342,18 +337,12 @@ object VecIndex {
     if (affected.isEmpty)
       return DeleteStats(0L, 0, filesTotal, (System.nanoTime() - t0) / 1000000)
 
-    val partCol = readMeta(spark, path).flatMap { m =>
-      if (m.lshBits.isDefined) Some(LshBucketCol)
-      else if (m.ivfCentroids.isDefined) Some(IvfClusterCol)
-      else None
-    }
     val sub = spark.read.option("basePath", path).parquet(affected.toIndexedSeq: _*)
     val deleted = sub.filter(pred).count()
     val kept = sub.filter(!coalesce(pred, lit(false)))
       .select(df.columns.toIndexedSeq.map(col): _*)
-    var writer = kept.write.mode(SaveMode.Append)
-    partCol.foreach(c => writer = writer.partitionBy(c))
-    writer.parquet(path)
+    writeLayout(kept, SaveMode.Append, path,
+      readMeta(spark, path).getOrElse(IndexMeta()), BuildOptions())
 
     val conf = spark.sessionState.newHadoopConf()
     affected.foreach { f =>
@@ -370,7 +359,8 @@ object VecIndex {
     * files → file-open overhead and loose zonemaps). Partitioned layouts
     * rewrite one file per partition directory; flat layouts re-sort by
     * `opts.sortBy` (restoring zonemap locality) or coalesce to
-    * `opts.numFiles`. Staged write-then-swap: the new dataset lands in a
+    * `opts.numFiles`. Row-group size and bloom filters come from `opts`,
+    * as in [[build]]. Staged write-then-swap: the new dataset lands in a
     * temp sibling and replaces the index with two filesystem renames, so
     * readers never observe a half-compacted directory. Index metadata is
     * carried over verbatim. */
@@ -380,15 +370,11 @@ object VecIndex {
       opts: BuildOptions = BuildOptions(),
       vecCol: String = "embedding"): BuildStats = {
     val t0 = System.nanoTime()
-    val meta = readMeta(spark, path)
+    val persisted = readMeta(spark, path)
+    val meta = persisted.getOrElse(IndexMeta())
     val df = spark.read.parquet(path)
-    val partCol = meta.flatMap { m =>
-      if (m.lshBits.isDefined) Some(LshBucketCol)
-      else if (m.ivfCentroids.isDefined) Some(IvfClusterCol)
-      else None
-    }
     val parts = opts.numFiles.getOrElse(spark.sparkContext.defaultParallelism)
-    val laidOut = partCol match {
+    val laidOut = partitionCol(meta) match {
       case Some(c) => df.repartition(col(c))
       case None if opts.sortBy.nonEmpty =>
         df.repartitionByRange(parts, opts.sortBy.map(col): _*)
@@ -396,16 +382,8 @@ object VecIndex {
       case None => df.coalesce(parts)
     }
     val tmp = path + ".compact-tmp"
-    var writer = laidOut.write.mode(SaveMode.Overwrite)
-      .option("parquet.block.size", opts.rowGroupBytes.toString)
-    partCol.foreach(c => writer = writer.partitionBy(c))
-    writer.parquet(tmp)
-    meta match {
-      case Some(m) =>
-        writeMetaValues(spark, tmp, m.lshBits, m.lshTable, m.ivfCentroids,
-          m.pqCodebooks, m.rpMatrix)
-      case None => ()
-    }
+    writeLayout(laidOut, SaveMode.Overwrite, tmp, meta, opts)
+    persisted.foreach(writeMetaValues(spark, tmp, _))
 
     val conf = spark.sessionState.newHadoopConf()
     val root = new org.apache.hadoop.fs.Path(path)
@@ -450,14 +428,7 @@ object VecIndex {
 
   /** Persist the build-time metadata under `_graft_meta` (underscore dir:
     * parquet scans of the index never see it). */
-  private def writeMetaValues(
-      spark: SparkSession,
-      path: String,
-      lshBits: Option[Int],
-      lshTable: Int,
-      ivfCentroids: Option[Seq[(Int, Seq[Double])]],
-      pqCodebooks: Option[Seq[Seq[Seq[Double]]]],
-      rpMatrix: Option[Seq[Seq[Double]]]): Unit = {
+  private def writeMetaValues(spark: SparkSession, path: String, meta: IndexMeta): Unit = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     // Explicit Row + schema, NOT a case-class/tuple .toDF: implicit
@@ -480,18 +451,18 @@ object VecIndex {
         containsNull = false), nullable = false),
       StructField("has_rp", BooleanType, nullable = false)))
     val row = Row(
-      lshBits.orNull, lshTable,
-      ivfCentroids.getOrElse(Seq.empty[(Int, Seq[Double])])
+      meta.lshBits.orNull, meta.lshTable,
+      meta.ivfCentroids.getOrElse(Seq.empty[(Int, Seq[Double])])
         .map { case (cid, c) => Row(cid, c) },
-      ivfCentroids.isDefined,
-      pqCodebooks.getOrElse(Seq.empty[Seq[Seq[Double]]]), pqCodebooks.isDefined,
-      rpMatrix.getOrElse(Seq.empty[Seq[Double]]), rpMatrix.isDefined)
+      meta.ivfCentroids.isDefined,
+      meta.pqCodebooks.getOrElse(Seq.empty[Seq[Seq[Double]]]), meta.pqCodebooks.isDefined,
+      meta.rpMatrix.getOrElse(Seq.empty[Seq[Double]]), meta.rpMatrix.isDefined)
     spark.createDataFrame(
         java.util.Collections.singletonList(row), schema)
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/$MetaDir")
   }
 
-  private def readMeta(spark: SparkSession, path: String): Option[graft.core.IndexMeta] = {
+  private def readMeta(spark: SparkSession, path: String): Option[IndexMeta] = {
     val metaPath = new org.apache.hadoop.fs.Path(path, MetaDir)
     val fs = metaPath.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(metaPath)) return None
@@ -518,7 +489,7 @@ object VecIndex {
           .map(row => row.toIndexedSeq: Seq[Double])
           .toIndexedSeq: Seq[Seq[Double]])
       else None
-    Some(graft.core.IndexMeta(lsh, r.getInt(r.fieldIndex("lsh_table")), cents, pq, rp))
+    Some(IndexMeta(lsh, r.getInt(r.fieldIndex("lsh_table")), cents, pq, rp))
   }
 
   /** Open a previously built index (physical layout + build metadata). */

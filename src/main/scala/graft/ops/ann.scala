@@ -376,7 +376,7 @@ object ann {
     }: _*)
     val cids = array(centroids.map { case (cid, _) => lit(cid) }: _*)
     df.withColumn("_dists", dists)
-      .withColumn("cluster_id",
+      .withColumn(graft.index.VecIndex.IvfClusterCol,
         element_at(cids, array_position(col("_dists"), array_min(col("_dists"))).cast("int")))
       .drop("_dists")
   }
@@ -573,14 +573,14 @@ object ann {
     val cbs = store.indexMeta.flatMap(_.pqCodebooks).getOrElse(
       throw new IllegalArgumentException(
         "graft: IVF-PQ needs BuildOptions(pqCodebooks = Some(...)) at build time"))
-    require(store.df.columns.contains("pq_code"),
-      "graft: index has PQ metadata but no persisted pq_code column")
+    val (cl, pq) = (graft.index.VecIndex.IvfClusterCol, graft.index.VecIndex.PqCodeCol)
+    require(store.df.columns.contains(pq),
+      s"graft: index has PQ metadata but no persisted $pq column")
     val probed = probeIds(centroids, q, nprobe)
-    val cl = graft.index.VecIndex.IvfClusterCol
     store.df
       .filter(col(cl).isin(probed: _*))
       .withColumn("score",
-        vectors.quantize(graft.ops.quant.pqAdcDot(col("pq_code"), cbs, q), 4))
+        vectors.quantize(graft.ops.quant.pqAdcDot(col(pq), cbs, q), 4))
       .orderBy(col("score").desc, col(store.idCol))
       .limit(k)
       .drop(cl)

@@ -25,7 +25,8 @@ object dedup {
   // ---- shingling -------------------------------------------------------
 
   /** Distinct word `n`-gram shingles of lowercased whitespace tokens;
-    * empty array when the document has fewer than `n` tokens. Native fused
+    * empty array when the document has fewer than `n` tokens, NULL for
+    * NULL text (which [[minhashed]] relies on to skip it). Native fused
     * kernel — see [[graft.functions.NativeExprs]] (the equivalent HOF
     * composition is [[wordShinglesHof]], kept as the executable spec). */
   def wordShingles(c: Column, n: Int = 3): Column =
@@ -38,7 +39,7 @@ object dedup {
     when(size(ts) >= n,
       array_distinct(transform(sequence(lit(1), size(ts) - (n - 1)),
         i => concat_ws(" ", slice(ts, i, lit(n))))))
-      .otherwise(array().cast("array<string>"))
+      .when(ts.isNotNull, array().cast("array<string>"))
   }
 
   /** All ordered pairs (a < b) from a SORTED id array, as structs
@@ -218,6 +219,16 @@ object dedup {
         concat_ws("_", slice(sigCol, b * r + 1, r).cast("array<string>")).as("band_key"))): _*)
   }
 
+  /** One row per (doc, band) of a signed frame's `sig` column:
+    * `(as, band_idx, band_key)`, the id renamed from `idCol` to `as` —
+    * the band encoding shared by every banded candidate generator and
+    * the persisted [[writeSignatureIndex]] band table. */
+  private def bandRows(sigs: DataFrame, idCol: String, as: String,
+      k: Int, bands: Int): DataFrame =
+    sigs.select(col(idCol).as(as), explode(lshBands(col("sig"), k, bands)).as("band"))
+      .select(col(as), col("band.band_idx").as("band_idx"),
+        col("band.band_key").as("band_key"))
+
   /** Probability that MinHash-LSH with `bands` bands of `rows` rows
     * surfaces a pair of true Jaccard similarity `s` as a candidate:
     * `1 - (1 - s^rows)^bands` (MMDS §3.4.2 — the S-curve). Driver-side
@@ -265,10 +276,7 @@ object dedup {
       n: Int = 3,
       pairFilter: Option[Column] = None): DataFrame = {
     val mh = minhashed(df, textCol, idCol, k, n)
-    val banded = mh
-      .select(col(idCol), explode(lshBands(col("sig"), k, bands)).as("band"))
-      .select(col(idCol), col("band.band_idx").as("band_idx"),
-        col("band.band_key").as("band_key"))
+    val banded = bandRows(mh, idCol, idCol, k, bands)
     // Candidate pairs via group-by-bucket + in-expression pair expansion,
     // NOT a self-join: a self-join would evaluate the whole shingle+hash
     // pipeline once per side, and costs two shuffles. Here the signature
@@ -1366,12 +1374,8 @@ object dedup {
       bands: Int = 8,
       n: Int = 3): DataFrame = {
     val bm = minhashed(batch, textCol, idCol, k, n)
-    def bandedOf(sigs: DataFrame, as: String) = sigs
-      .select(col(idCol).as(as), explode(lshBands(col("sig"), k, bands)).as("band"))
-      .select(col(as), col("band.band_idx").as("band_idx"),
-        col("band.band_key").as("band_key"))
-    val cands = bandedOf(corpusSigs, "corpus_id")
-      .join(broadcast(bandedOf(bm, "new_id")), Seq("band_idx", "band_key"))
+    val cands = bandRows(corpusSigs, idCol, "corpus_id", k, bands)
+      .join(broadcast(bandRows(bm, idCol, "new_id", k, bands)), Seq("band_idx", "band_key"))
       .select(col("corpus_id"), col("new_id"))
       .distinct()
     val ga = corpusSigs.select(col(idCol).as("corpus_id"), col("grams").as("grams_a"))
@@ -1557,10 +1561,7 @@ object dedup {
     val mh = minhashed(df, textCol, idCol, k, n)
     mh.select(col(idCol).as("id"), col("grams"), col("sig"))
       .write.mode(mode).parquet(s"$path/sigs")
-    mh.select(col(idCol).as("id"),
-        explode(lshBands(col("sig"), k, bands)).as("band"))
-      .select(col("id"), col("band.band_idx").as("band_idx"),
-        col("band.band_key").as("band_key"))
+    bandRows(mh, idCol, "id", k, bands)
       .withColumn("bucket", pmod(hashing.h32(col("band_key")), lit(buckets.toLong)))
       .write.mode(mode).partitionBy("bucket").parquet(s"$path/bands")
   }
@@ -1592,10 +1593,7 @@ object dedup {
       buckets: Int = 64): DataFrame = {
     val s = batch.sparkSession
     val bm = minhashed(batch, textCol, idCol, k, n)
-    val bban = bm
-      .select(col(idCol).as("new_id"), explode(lshBands(col("sig"), k, bands)).as("band"))
-      .select(col("new_id"), col("band.band_idx").as("band_idx"),
-        col("band.band_key").as("band_key"))
+    val bban = bandRows(bm, idCol, "new_id", k, bands)
       .withColumn("bucket", pmod(hashing.h32(col("band_key")), lit(buckets.toLong)))
     // ≤ `buckets` distinct values by construction — a bounded driver
     // pull that buys static partition pruning on the corpus index scan.

@@ -102,7 +102,7 @@ object quant {
       val dists = array(cb.map(cw => vectors.l2Squared(subVec, vectors.vecLit(cw))): _*)
       (array_position(dists, array_min(dists)) - 1).cast("int")
     }
-    df.withColumn("pq_code", array(codes: _*))
+    df.withColumn(graft.index.VecIndex.PqCodeCol, array(codes: _*))
   }
 
   /** Driver-side dot product with the same sequential fold as the native
@@ -139,10 +139,11 @@ object quant {
       k: Int,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
+    val pq = graft.index.VecIndex.PqCodeCol
     val encoded =
-      if (df.columns.contains("pq_code")) df else pqEncode(df, codebooks, vecCol)
+      if (df.columns.contains(pq)) df else pqEncode(df, codebooks, vecCol)
     encoded
-      .withColumn("score", graft.functions.vectors.quantize(pqAdcDot(col("pq_code"), codebooks, q), 4))
+      .withColumn("score", graft.functions.vectors.quantize(pqAdcDot(col(pq), codebooks, q), 4))
       .orderBy(col("score").desc, col(idCol))
       .limit(k)
   }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -147,19 +147,8 @@ object retrieval {
       idCol: String,
       buckets: Int = 64): Unit = {
     require(buckets >= 1, s"graft: buckets must be positive, got $buckets")
-    val base = docs.select(col(idCol).as("doc_id"), text.tokens(col(textCol)).as("toks"))
-      .withColumn("dl", size(col("toks")).cast("long"))
-    val postings = base
-      .select(col("doc_id"), col("dl"), explode(col("toks")).as("term"))
-      .groupBy(col("term"), col("doc_id"), col("dl"))
-      .agg(count(lit(1)).as("tf"))
-      .withColumn("term_bucket",
-        pmod(graft.functions.hashing.h32(col("term")), lit(buckets)).cast("int"))
-    postings
-      .repartition(col("term_bucket"))
-      .write.mode("overwrite").partitionBy("term_bucket")
-      .parquet(s"$path/postings")
-    base.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
+    writePostings(docs, path, textCol, idCol, buckets, SaveMode.Overwrite)
+      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
       .withColumn("buckets", lit(buckets))
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$path/meta")
@@ -182,18 +171,8 @@ object retrieval {
     val spark = docs.sparkSession
     val meta = spark.read.parquet(s"$path/meta").head()
     val buckets = meta.getAs[Int]("buckets")
-    val base = docs.select(col(idCol).as("doc_id"), text.tokens(col(textCol)).as("toks"))
-      .withColumn("dl", size(col("toks")).cast("long"))
-    base
-      .select(col("doc_id"), col("dl"), explode(col("toks")).as("term"))
-      .groupBy(col("term"), col("doc_id"), col("dl"))
-      .agg(count(lit(1)).as("tf"))
-      .withColumn("term_bucket",
-        pmod(graft.functions.hashing.h32(col("term")), lit(buckets)).cast("int"))
-      .repartition(col("term_bucket"))
-      .write.mode("append").partitionBy("term_bucket")
-      .parquet(s"$path/postings")
-    val add = base.agg(count(lit(1)).as("n"), sum(col("dl")).as("s")).head()
+    val add = writePostings(docs, path, textCol, idCol, buckets, SaveMode.Append)
+      .agg(count(lit(1)).as("n"), sum(col("dl")).as("s")).head()
     // Crash ordering: postings land first, stats second. A crash between
     // the two leaves stats STALE (scores briefly use the old N/avgdl)
     // but never corrupt — df comes from the postings themselves, and the
@@ -205,6 +184,32 @@ object retrieval {
       .toDF("n_docs", "sum_dl", "buckets")
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$path/meta")
+  }
+
+  /** Tokenize `docs` once and write their `(term, doc_id, tf, dl)`
+    * postings into the term-bucket directories under `path` — the one
+    * postings writer behind [[buildTextIndex]] and [[appendTextIndex]].
+    * Returns the tokenized `(doc_id, toks, dl)` rows, which the caller
+    * sums into the corpus stats. */
+  private def writePostings(
+      docs: DataFrame,
+      path: String,
+      textCol: String,
+      idCol: String,
+      buckets: Int,
+      mode: SaveMode): DataFrame = {
+    val base = docs.select(col(idCol).as("doc_id"), text.tokens(col(textCol)).as("toks"))
+      .withColumn("dl", size(col("toks")).cast("long"))
+    base
+      .select(col("doc_id"), col("dl"), explode(col("toks")).as("term"))
+      .groupBy(col("term"), col("doc_id"), col("dl"))
+      .agg(count(lit(1)).as("tf"))
+      .withColumn("term_bucket",
+        pmod(graft.functions.hashing.h32(col("term")), lit(buckets)).cast("int"))
+      .repartition(col("term_bucket"))
+      .write.mode(mode).partitionBy("term_bucket")
+      .parquet(s"$path/postings")
+    base
   }
 
   /** BM25 top-k over a [[buildTextIndex]] layout: probe-bucket partition

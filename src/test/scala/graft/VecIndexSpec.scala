@@ -99,23 +99,30 @@ class VecIndexSpec extends SparkSpec {
       col("id").as("vec_id"),
       concat(lit("name_"), col("id")).as("name"),
       array(Seq(sin(col("id").cast("double")), cos(col("id").cast("double"))): _*).as("embedding"))
-    VecIndex.build(df, s"$tmp/bloom_idx",
-      opts = VecIndex.BuildOptions(bloomCols = Seq("name"), bloomNdv = 2000,
-        bloomFpp = Some(0.005), numFiles = Some(1)))
+    val opts = VecIndex.BuildOptions(bloomCols = Seq("name"), bloomNdv = 2000,
+      bloomFpp = Some(0.005), numFiles = Some(1))
+    VecIndex.build(df, s"$tmp/bloom_idx", opts = opts)
     import scala.jdk.CollectionConverters._
-    val part = new java.io.File(s"$tmp/bloom_idx").listFiles()
-      .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_")).head
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(part.getAbsolutePath),
-      spark.sessionState.newHadoopConf())
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
-      val block = reader.getFooter.getBlocks.asScala.head
-      val nameCol = block.getColumns.asScala.find(_.getPath.toDotString == "name").get
-      assert(nameCol.getBloomFilterOffset >= 0, "no bloom filter written for 'name'")
-      val bloom = reader.getBloomFilterDataReader(block).readBloomFilter(nameCol)
-      assert(bloom != null && bloom.getBitsetSize > 0)
-    } finally reader.close()
+    // every row group of every data file carries a non-empty 'name' filter
+    def assertBlooms(stage: String): Unit = new java.io.File(s"$tmp/bloom_idx").listFiles()
+      .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
+      .foreach { part =>
+        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(part.getAbsolutePath),
+          spark.sessionState.newHadoopConf())
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        try reader.getFooter.getBlocks.asScala.foreach { block =>
+          val nameCol = block.getColumns.asScala.find(_.getPath.toDotString == "name").get
+          assert(nameCol.getBloomFilterOffset >= 0,
+            s"no bloom filter written for 'name' after $stage (${part.getName})")
+          val bloom = reader.getBloomFilterDataReader(block).readBloomFilter(nameCol)
+          assert(bloom != null && bloom.getBitsetSize > 0)
+        } finally reader.close()
+      }
+    assertBlooms("build")
+    // compact rewrites every file with the same options
+    VecIndex.compact(spark, s"$tmp/bloom_idx", opts)
+    assertBlooms("compact")
   }
 
   test("bloomMaxBytes clamps the written filter (with_bloom_bits analog)") {
@@ -291,6 +298,69 @@ class VecIndexSpec extends SparkSpec {
     assert(stats.rows == 120 && stats.dim == 8)
     assert(stats.files < filesBefore, s"compaction must shrink file count: $stats")
     assert(results() == before)
+  }
+
+  test("append equals a fresh build for every layout; compact keeps rows and meta") {
+    val dim = 8
+    val rows = (0 until 180).map(i =>
+      (i.toLong, (0 until dim).map(d => math.sin(i * 5.0 + d)).toArray, i % 3))
+    def frame(r: Seq[(Long, Array[Double], Int)]) =
+      r.toDF("vec_id", "embedding", "label").coalesce(1)
+    val cents = (0 until 4).map(c => (c, (0 until dim).map(d => math.cos(c * 3.0 + d)): Seq[Double]))
+    val cbs = (0 until 2).map(s => (0 until 4).map(c =>
+      (0 until dim / 2).map(d => math.sin(s * 31.0 + c * 7.0 + d)): Seq[Double]))
+    val layouts = Seq(
+      "plain" -> VecIndex.BuildOptions(),
+      "lsh" -> VecIndex.BuildOptions(lshBits = Some(3)),
+      "ivf" -> VecIndex.BuildOptions(ivfCentroids = Some(cents)),
+      "rp" -> VecIndex.BuildOptions(rpDims = Some(3)),
+      "pq" -> VecIndex.BuildOptions(pqCodebooks = Some(cbs)),
+      "ivfpq" -> VecIndex.BuildOptions(ivfCentroids = Some(cents), pqCodebooks = Some(cbs)))
+    // every column, cast to string, in a sorted row list
+    def content(s: VecStore): (Seq[String], Seq[String]) = {
+      val cols = s.df.columns.toSeq.sorted
+      (cols, s.df.select(cols.map(c => col(c).cast("string")): _*).collect()
+        .map(_.toSeq.mkString("|")).toSeq.sorted)
+    }
+    layouts.foreach { case (name, opts) =>
+      val (appended, fresh) = (s"$tmp/twin_${name}_app", s"$tmp/twin_${name}_full")
+      VecIndex.build(frame(rows.take(120)), appended, opts = opts)
+      val (store, _) = VecIndex.append(frame(rows.drop(120)), appended)
+      val (full, _) = VecIndex.build(frame(rows), fresh, opts = opts)
+      val want = content(full)
+      assert(want._2.size == 180)
+      assert(content(store) == want, s"$name: build + append != fresh build")
+      assert(store.indexMeta == full.indexMeta && full.indexMeta.isDefined, name)
+
+      VecIndex.compact(spark, appended, opts)
+      val compacted = VecIndex.load(spark, appended)
+      assert(content(compacted) == want, s"$name: compact changed rows")
+      assert(compacted.indexMeta == full.indexMeta, s"$name: compact changed meta")
+    }
+  }
+
+  test("append to an index emptied by delete takes the batch's dimension") {
+    val mk = (r: Range, dim: Int) => r
+      .map(i => (i.toLong, (0 until dim).map(d => math.sin(i * 9.0 + d)).toArray, i % 2))
+      .toDF("vec_id", "embedding", "label")
+    val plain = s"$tmp/emptied_plain"
+    VecIndex.build(mk(0 until 40, 8), plain)
+    assert(VecIndex.delete(spark, plain, lit(true)).rowsDeleted == 40)
+    val (store, st) = VecIndex.append(mk(40 until 50, 8), plain)
+    assert(st.rows == 10 && st.dim == 8 && store.df.count() == 10)
+    val q = (0 until 8).map(d => math.sin(44 * 9.0 + d))
+    assert(store.query(q, Metric.Cosine).take(1).collect()
+      .select("vec_id").as[Long].head() == 44L)
+
+    // a projection fixes the dimension even with no stored vector left
+    val rp = s"$tmp/emptied_rp"
+    VecIndex.build(mk(0 until 40, 8), rp, opts = VecIndex.BuildOptions(rpDims = Some(3)))
+    VecIndex.delete(spark, rp, lit(true))
+    val e = intercept[IllegalArgumentException] {
+      VecIndex.append(mk(40 until 50, 6), rp)
+    }
+    assert(e.getMessage.contains("appended dimension 6 != stored dimension 8"))
+    assert(VecIndex.append(mk(40 until 50, 8), rp)._1.df.count() == 10)
   }
 
   test("z-order clustering: range filters on EITHER dimension prune row groups") {
