@@ -350,7 +350,7 @@ object NativeExprs {
   /** Column: one greedy left-to-right BPE merge pass over a symbol array —
     * each adjacent (l, r) becomes the fused symbol l+r, never re-examining
     * the fused output in the same pass ("aaa" under (a,a) → ["aa","a"]).
-    * Compositional twin: [[graft.ops.bpe.mergePairHof]]. */
+    * Compositional twin: `HofTwins.mergePairHof` (tests). */
   def bpeMergePair(syms: Column, l: String, r: String): Column =
     column(BpeMergeExpr(expression(syms), l, r))
 
@@ -358,7 +358,7 @@ object NativeExprs {
     * tokens, each split to code points and run through `rules` in
     * training order — flattened to one subword array per row. One
     * compiled pass; the per-rule compositional twin is
-    * [[graft.ops.bpe.encodeHof]]. */
+    * `HofTwins.encodeHof` (tests). */
   def bpeEncode(c: Column, rules: Seq[(String, String)]): Column =
     column(BpeEncodeExpr(expression(c), rules.toIndexedSeq))
 
@@ -605,7 +605,7 @@ object NativeExprs {
   /** Per-row n-gram repetition masses: (top, dup) where `top` is the max
     * over distinct word n-grams of count·charLen and `dup` sums count·charLen
     * over n-grams occurring more than once. One hashmap pass per row —
-    * the HOF composition ([[graft.ops.text.repetitionMassesHof]]) is
+    * the HOF composition (`HofTwins.repetitionMassesHof`, tests) is
     * O(G²) interpreted. */
   def repetitionMassesOf(text: UTF8String, n: Int): (Long, Long) = {
     val toks = lowerTokens(text)
@@ -950,7 +950,7 @@ object NativeExprs {
   /** Winnowing fingerprints in ONE compiled pass (Schleimer et al.
     * SIGMOD'03): gram-hash the document once, slide the w-window minima,
     * collect distinct selections in first-occurrence order. The HOF twin
-    * ([[graft.ops.dedup.winnowFingerprintsHof]]) embeds the gram-hash
+    * (`HofTwins.winnowFingerprintsHof`, tests) embeds the gram-hash
     * array inside the window lambda, and HOF lambdas get no
     * common-subexpression elimination — the md5 array is recomputed PER
     * WINDOW ELEMENT, an O(G²) digest blowup (measured 30 s for the

@@ -45,17 +45,9 @@ object vectors {
   /** Dot product — sequential fold in double, as one native compiled
     * loop (HOFs evaluate interpreted; this is the hot scoring kernel, the
     * one place custom Catalyst code pays — SURVEY.md §4 #10).
-    * Bit-identical to [[dotProductHof]], asserted in NativeExprsSpec.
+    * Bit-identical to `HofTwins.dotProductHof`, asserted in NativeExprsSpec.
     * Ref: /root/reference/src/vec_compute.rs:8-22. */
   def dotProduct(a: Column, b: Column): Column = NativeExprs.vecDot(a, b)
-
-  /** Compositional (HOF) dot product — the executable spec of the native
-    * kernel; same fold order, so results are bit-identical. */
-  def dotProductHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(asDoubleArray(a), asDoubleArray(b), (x, y) => x * y),
-      lit(0.0),
-      (acc, x) => acc + x)
 
   /** Sum of squares of a vector (same fold as `dot(v, v)`). */
   def squaredNorm(v: Column): Column = NativeExprs.vecDot(v, v)
@@ -82,42 +74,20 @@ object vectors {
   /** SQUARED euclidean distance — the reference intentionally skips the
     * sqrt (vec_compute.rs:34-54). Computed as sum((x-y)^2), NOT as
     * |a|^2-2ab+|b|^2, to avoid catastrophic cancellation on near-duplicate
-    * vectors. Native kernel; bit-identical to [[l2SquaredHof]]. */
+    * vectors. Native kernel; bit-identical to `HofTwins.l2SquaredHof`. */
   def l2Squared(a: Column, b: Column): Column = NativeExprs.vecL2Sq(a, b)
 
-  /** Compositional (HOF) squared L2 — executable spec of the kernel. */
-  def l2SquaredHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(asDoubleArray(a), asDoubleArray(b), (x, y) => (x - y) * (x - y)),
-      lit(0.0),
-      (acc, x) => acc + x)
-
   /** L1 (Manhattan) distance — reference-roadmap metric. Native kernel;
-    * bit-identical to [[l1DistanceHof]]. */
+    * bit-identical to `HofTwins.l1DistanceHof`. */
   def l1Distance(a: Column, b: Column): Column = NativeExprs.vecL1(a, b)
-
-  /** Compositional (HOF) L1 — executable spec of the kernel. */
-  def l1DistanceHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(asDoubleArray(a), asDoubleArray(b), (x, y) => abs(x - y)),
-      lit(0.0),
-      (acc, x) => acc + x)
 
   /** Element-wise Hamming distance — count of coordinate positions where
     * the two equal-length signature arrays differ (binary sign codes,
     * quantized codes). Reference-roadmap metric (README.md:211). Native
-    * kernel; bit-identical to [[hammingDistanceHof]]. Like the other
+    * kernel; bit-identical to `HofTwins.hammingDistanceHof`. Like the other
     * kernels, a length mismatch is resolved by the shorter length (the
     * SearchPlan dim guard rejects mismatches before scoring). */
   def hammingDistance(a: Column, b: Column): Column = NativeExprs.vecHamming(a, b)
-
-  /** Compositional (HOF) Hamming — executable spec of the kernel. */
-  def hammingDistanceHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(asDoubleArray(a), asDoubleArray(b),
-        (x, y) => when(x === y, 0.0).otherwise(1.0)),
-      lit(0.0),
-      (acc, x) => acc + x)
 
   /** Pack a vector's SIGN BITS (bit = `v[i] >= 0`) into 63-bit words
     * (array<long>) — the persisted binary-signature serving shape: a

@@ -341,8 +341,17 @@ object VecIndex {
     val deleted = sub.filter(pred).count()
     val kept = sub.filter(!coalesce(pred, lit(false)))
       .select(df.columns.toIndexedSeq.map(col): _*)
-    writeLayout(kept, SaveMode.Append, path,
-      readMeta(spark, path).getOrElse(IndexMeta()), BuildOptions())
+    val meta = readMeta(spark, path).getOrElse(IndexMeta())
+    writeLayout(kept, SaveMode.Append, path, meta, BuildOptions())
+    // A partitioned write of no rows creates no file, and removing the
+    // originals would leave an index with no schema. Keep one empty file
+    // with the data schema in an existing partition directory instead:
+    // the emptied index loads, reads and appends like a flat one.
+    partitionCol(meta).foreach { c =>
+      if (affected.length == filesTotal && kept.isEmpty)
+        kept.drop(c).coalesce(1).write.mode(SaveMode.Append)
+          .parquet(new org.apache.hadoop.fs.Path(affected.head).getParent.toString)
+    }
 
     val conf = spark.sessionState.newHadoopConf()
     affected.foreach { f =>

@@ -59,19 +59,11 @@ object ann {
   /** LSH signature of a vector column for table `t`: an `nbits`-bit code
     * packed into a long, bit j = `[v·h_j > 0]`. One fused kernel pass
     * over all `nbits` planes (see [[graft.functions.NativeExprs.lshSig]];
-    * the per-bit composition is kept as [[lshSignatureHof]], the
-    * executable spec). */
+    * the per-bit composition is the test-side spec
+    * `HofTwins.lshSignatureHof`). */
   def lshSignature(v: Column, t: Int, nbits: Int, dim: Int): Column =
     graft.functions.NativeExprs.lshSig(v,
       (0 until nbits).map(j => hyperplane(t, j, dim)))
-
-  /** Compositional (per-bit dot product) form of [[lshSignature]] — same
-    * semantics, used to cross-check the fused kernel. */
-  def lshSignatureHof(v: Column, t: Int, nbits: Int, dim: Int): Column =
-    (0 until nbits).map { j =>
-      when(vectors.dotProduct(v, vectors.vecLit(hyperplane(t, j, dim))) > 0,
-        lit(1L << j)).otherwise(lit(0L))
-    }.reduce(_ + _)
 
   /** Driver-side signature of a literal query vector (same bit rule). */
   def lshSignatureOf(q: Seq[Double], t: Int, nbits: Int): Long =
@@ -577,12 +569,8 @@ object ann {
     require(store.df.columns.contains(pq),
       s"graft: index has PQ metadata but no persisted $pq column")
     val probed = probeIds(centroids, q, nprobe)
-    store.df
-      .filter(col(cl).isin(probed: _*))
-      .withColumn("score",
-        vectors.quantize(graft.ops.quant.pqAdcDot(col(pq), cbs, q), 4))
-      .orderBy(col("score").desc, col(store.idCol))
-      .limit(k)
+    graft.ops.quant.pqSearchDot(store.df.filter(col(cl).isin(probed: _*)),
+      cbs, q, k, store.idCol)
       .drop(cl)
   }
 

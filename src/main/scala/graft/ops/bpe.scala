@@ -104,42 +104,4 @@ object bpe {
     * order) — one fused pass, zero shuffle. */
   def encodeTokens(c: Column, rules: Seq[(String, String)]): Column =
     NativeExprs.bpeEncode(c, rules)
-
-  // ---- compositional twins (executable specs of the kernels) -----------
-
-  /** HOF form of one greedy merge pass: a left fold carrying
-    * (out, prev) — prev matches `l` and the element matches `r` → fuse;
-    * otherwise flush prev. Interpreted; used by tests to pin the native
-    * kernel bit-identical. */
-  def mergePairHof(syms: Column, l: String, r: String): Column = {
-    val zero = struct(
-      array().cast("array<string>").as("out"),
-      lit(null).cast("string").as("prev"))
-    aggregate(syms, zero,
-      (st, x) => {
-        val out = st.getField("out")
-        val prev = st.getField("prev")
-        when(prev === lit(l) && x === lit(r),
-          struct(concat(out, array(lit(l + r))).as("out"),
-            lit(null).cast("string").as("prev")))
-          .otherwise(struct(
-            when(prev.isNull, out).otherwise(concat(out, array(prev))).as("out"),
-            x.as("prev")))
-      },
-      st =>
-        when(st.getField("prev").isNull, st.getField("out"))
-          .otherwise(concat(st.getField("out"), array(st.getField("prev")))))
-  }
-
-  /** HOF form of the full encode: tokens → code-point split → each rule's
-    * [[mergePairHof]] in order → flatten. Builds a rules-deep expression
-    * tree — test-only. */
-  def encodeHof(c: Column, rules: Seq[(String, String)]): Column = {
-    val symsOf = (w: Column) =>
-      rules.foldLeft(
-        transform(sequence(lit(1), length(w)), i => w.substr(i, lit(1)))) {
-        case (acc, (l, r)) => mergePairHof(acc, l, r)
-      }
-    flatten(transform(text.tokens(c), symsOf))
-  }
 }

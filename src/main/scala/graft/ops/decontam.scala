@@ -178,8 +178,9 @@ object decontam {
     * no state store, no watermark, no foreachBatch: the same call
     * screens a 100 TB batch corpus and a live ingest stream. Keeps the
     * no-false-negative guarantee; FP-rate docs are the price of the
-    * constant-size sketch. Bit-identical to [[bloomCleanHof]], the
-    * compositional executable spec (NativeExprsSpec asserts the law). */
+    * constant-size sketch. Bit-identical to the compositional spec
+    * `bloomCleanHof` in the test object `HofTwins` (NativeExprsSpec
+    * asserts the law). */
   def bloomClean(
       df: DataFrame,
       bloomDf: DataFrame,
@@ -194,28 +195,10 @@ object decontam {
       .bloomGramHits(col(textCol), words, n, mBits, k) < minHits)
   }
 
-  /** Compositional (HOF) twin of [[bloomClean]] — the executable spec of
-    * the fused kernel: same shingle set, same digest-derived positions,
-    * via [[dedup.wordShingles]] + [[sketch.bloomMightContain]]. */
-  def bloomCleanHof(
-      df: DataFrame,
-      bloomDf: DataFrame,
-      textCol: String,
-      n: Int = 8,
-      mBits: Int = 4032,
-      k: Int = 3,
-      minHits: Int = 1): DataFrame = {
-    require(minHits >= 1, s"graft: bloomCleanHof needs minHits >= 1, got $minHits")
-    val words = collectBloomWords(bloomDf, mBits, k)
-    df.where(
-      size(filter(dedup.wordShingles(col(textCol), n),
-        g => sketch.bloomMightContain(words, g, mBits, k))) < minHits)
-  }
-
   /** Collect a [[sketch.bloom]] artifact's word spine driver-side
     * (`mBits/63` longs by construction — bounded state, like the PQ
     * codebooks), validating its shape against the probe parameters. */
-  private def collectBloomWords(bloomDf: DataFrame, mBits: Int, k: Int): Seq[Long] = {
+  private[graft] def collectBloomWords(bloomDf: DataFrame, mBits: Int, k: Int): Seq[Long] = {
     val words = bloomDf.orderBy(col("word"))
       .select(col("bits")).collect().map(_.getLong(0)).toSeq
     require(words.length == sketch.bloomWordCount(mBits),

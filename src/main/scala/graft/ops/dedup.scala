@@ -28,19 +28,9 @@ object dedup {
     * empty array when the document has fewer than `n` tokens, NULL for
     * NULL text (which [[minhashed]] relies on to skip it). Native fused
     * kernel — see [[graft.functions.NativeExprs]] (the equivalent HOF
-    * composition is [[wordShinglesHof]], kept as the executable spec). */
+    * composition is `HofTwins.wordShinglesHof`, the test-side spec). */
   def wordShingles(c: Column, n: Int = 3): Column =
     graft.functions.NativeExprs.wordShingles(c, n)
-
-  /** Compositional (HOF) form of [[wordShingles]] — same semantics,
-    * interpreted evaluation; used to cross-check the native kernel. */
-  def wordShinglesHof(c: Column, n: Int = 3): Column = {
-    val ts = text.tokens(c)
-    when(size(ts) >= n,
-      array_distinct(transform(sequence(lit(1), size(ts) - (n - 1)),
-        i => concat_ws(" ", slice(ts, i, lit(n))))))
-      .when(ts.isNotNull, array().cast("array<string>"))
-  }
 
   /** All ordered pairs (a < b) from a SORTED id array, as structs
     * (id_a, id_b) — in-expression pair expansion for bucket candidate
@@ -167,13 +157,6 @@ object dedup {
   }
 
   // ---- MinHash + LSH ---------------------------------------------------
-
-  /** MinHash signature over a column of PRE-HASHED shingles (HOF form,
-    * the executable spec of the native kernel): element j = min over base
-    * hashes h of `affine_j(h)`. */
-  def minhashSignatureHof(baseHashes: Column, k: Int): Column =
-    array((0 until k).map(j =>
-      array_min(transform(baseHashes, h => hashing.affine(h, j)))): _*)
 
   /** `df.where(cond).select(keep ++ fields)` where `cond` tests a column
     * that an expensive kernel computes in `df`'s own projection. A plain
@@ -877,27 +860,13 @@ object dedup {
     * first-occurrence order); signature size ≤ grams/w expected
     * (2/(w+1) selection density). Empty/short docs: fewer grams than
     * `w` yields the single global min; no grams yields an empty array.
-    * [[winnowFingerprintsHof]] is the executable spec twin — do NOT use
-    * it in a hot path: its window lambda re-evaluates the md5 gram-hash
-    * array per element (no CSE inside HOF lambdas), an O(G²) digest
-    * blowup measured at 30× the kernel's cost. */
+    * The test-side spec twin, `HofTwins.winnowFingerprintsHof`, is no
+    * hot-path substitute: its window lambda re-evaluates the md5
+    * gram-hash array per element (no CSE inside HOF lambdas), an O(G²)
+    * digest blowup measured at 30× the kernel's cost. */
   def winnowFingerprints(c: Column, n: Int = 4, w: Int = 4): Column = {
     require(n >= 1 && w >= 1, s"graft: winnow needs n >= 1, w >= 1; got $n, $w")
     graft.functions.NativeExprs.winnowFp(c, n, w)
-  }
-
-  /** Compositional HOF twin of [[winnowFingerprints]] — the executable
-    * spec (pinned element-equal in DedupSpec), not the production path. */
-  def winnowFingerprintsHof(c: Column, n: Int = 4, w: Int = 4): Column = {
-    require(n >= 1 && w >= 1, s"graft: winnow needs n >= 1, w >= 1; got $n, $w")
-    val hashes = transform(graft.functions.NativeExprs.wordGrams(c, n),
-      g => hashing.h32(g))
-    when(size(hashes) >= w,
-        array_distinct(transform(
-          sequence(lit(1), size(hashes) - (w - 1)),
-          i => array_min(slice(hashes, i, lit(w))))))
-      .when(size(hashes) > 0, array(array_min(hashes)))
-      .otherwise(array().cast("array<long>"))
   }
 
   /** Partial-copy candidate pairs from shared winnowing fingerprints:
@@ -955,7 +924,7 @@ object dedup {
     * signatures within a few bits of Hamming distance.
     *
     * Computed per row by a native fused kernel — ZERO shuffle (the
-    * explode+groupBy composition, kept below as [[simhashHof]], shuffles
+    * explode+groupBy composition, `HofTwins.simhashHof` in the tests, shuffles
     * every token row). Documents with no tokens are excluded, matching
     * the explode form where empty docs produce no rows. */
   def simhash(df: DataFrame, textCol: String, idCol: String,
@@ -963,29 +932,6 @@ object dedup {
     df.where(size(text.tokens(col(textCol))) > 0)
       .select(col(idCol),
         graft.functions.NativeExprs.simhash(col(textCol), bits).as("simhash"))
-
-  /** Compositional form of [[simhash]] (explode → per-doc vote sums) —
-    * the executable spec of the native kernel. Bits 0-31 vote from the
-    * token's h32; bits 32-63 from the md5's second word ([[hashing.h32b]]),
-    * mirroring the kernel. */
-  def simhashHof(df: DataFrame, textCol: String, idCol: String,
-      bits: Int = 16): DataFrame = {
-    require(bits >= 1 && bits <= 64, s"simhash bits must be in [1, 64], got $bits")
-    val tok = df
-      .select(col(idCol), explode(text.tokens(col(textCol))).as("tok"))
-      .withColumn("hv", hashing.h32(col("tok")))
-      .withColumn("hv2", hashing.h32b(col("tok")))
-    val votes = (0 until bits).map { j =>
-      val src = if (j < 32) shiftright(col("hv"), j) else shiftright(col("hv2"), j - 32)
-      sum(when(src.bitwiseAND(1) === 1, 1).otherwise(-1)).as(s"b$j")
-    }
-    val agg = tok.groupBy(col(idCol)).agg(votes.head, votes.tail: _*)
-    // bitwiseOR, not +: bit 63's term is Long.MinValue and the bits are
-    // disjoint anyway.
-    val sig = (0 until bits).map(j =>
-      when(col(s"b$j") > 0, lit(1L << j)).otherwise(lit(0L))).reduce(_ bitwiseOR _)
-    agg.select(col(idCol), sig.as("simhash"))
-  }
 
   /** SimHash near-dup pairs via quarter blocking (Manku/Google, WWW'07):
     * the signature splits into 4 equal disjoint blocks and candidates
@@ -1115,35 +1061,6 @@ object dedup {
 
   // ---- near-dup clustering (connected components) ----------------------
 
-  /** Connected components over an undirected edge list — the terminal
-    * stage of the dedup pipeline: near-dup PAIRS become CLUSTERS, each
-    * member labeled with its component's minimum id so "keep one per
-    * cluster" is `where(id === rep)`.
-    *
-    * Algorithm: alternating large-star / small-star contraction (Kiveris
-    * et al., "Connected Components in MapReduce and Beyond", SoCC'14),
-    * the standard O(log²) -round formulation for clusters whose pair graph
-    * is a long chain (A≈B≈C≈…), where naive min-label propagation needs
-    * O(chain length) rounds. Each half-round is one thin groupBy + one
-    * join on (id, id) rows — no neighbor lists are ever collected into a
-    * single row, so a hub node with 10⁷ neighbors is just a skewed shuffle
-    * key (AQE splits it), not an OOM.
-    *
-    * Scale discipline (100 TB): the edge set is checkpointed every
-    * round to truncate lineage (iterative plans otherwise grow
-    * exponentially); convergence is detected by a (count, hash-sum)
-    * checksum of the canonical edge set, collected via `observe()` ON the
-    * checkpoint job itself — no separate aggregation pass over the edges
-    * per round, and far cheaper than a full `except` self-compare. With
-    * `spark.sparkContext.setCheckpointDir` set, rounds checkpoint
-    * RELIABLY instead (executor loss costs a re-read, not the job — see
-    * [[ckpt]]); without it, local mode keeps blocks in executor storage.
-    *
-    * Returns one row per node incident to at least one edge:
-    * `(id, rep)` with `rep` = min id of the component (reps map to
-    * themselves). Singleton docs never enter the pair list and are their
-    * own trivial cluster — join back to the corpus for keep-list
-    * semantics. */
   /** One-pass driver-side finish for a SMALL canonical edge set:
     * union-find with union-by-min, so every tree root — and therefore
     * every `find` — is the component minimum, the exact contract of the
@@ -1174,6 +1091,37 @@ object dedup {
     out.toDF("id", "rep")
   }
 
+  /** Connected components over an undirected edge list — the terminal
+    * stage of the dedup pipeline: near-dup PAIRS become CLUSTERS, each
+    * member labeled with its component's minimum id so "keep one per
+    * cluster" is `where(id === rep)`.
+    *
+    * Algorithm: alternating large-star / small-star contraction (Kiveris
+    * et al., "Connected Components in MapReduce and Beyond", SoCC'14),
+    * the standard O(log²) -round formulation for clusters whose pair graph
+    * is a long chain (A≈B≈C≈…), where naive min-label propagation needs
+    * O(chain length) rounds. Each half-round is one thin groupBy + one
+    * join on (id, id) rows — no neighbor lists are ever collected into a
+    * single row, so a hub node with 10⁷ neighbors is just a skewed shuffle
+    * key (AQE splits it), not an OOM.
+    *
+    * Scale discipline (100 TB): the edge set is checkpointed every
+    * round to truncate lineage (iterative plans otherwise grow
+    * exponentially); convergence is detected by a (count, hash-sum)
+    * checksum of the canonical edge set, collected via `observe()` ON the
+    * checkpoint job itself — no separate aggregation pass over the edges
+    * per round. A checksum match is only the signal: the fixpoint is then
+    * confirmed by an exact `exceptAll` in both directions over the two
+    * checkpointed edge sets, so convergence never rests on a hash. With
+    * `spark.sparkContext.setCheckpointDir` set, rounds checkpoint
+    * RELIABLY instead (executor loss costs a re-read, not the job — see
+    * [[ckpt]]); without it, local mode keeps blocks in executor storage.
+    *
+    * Returns one row per node incident to at least one edge:
+    * `(id, rep)` with `rep` = min id of the component (reps map to
+    * themselves). Singleton docs never enter the pair list and are their
+    * own trivial cluster — join back to the corpus for keep-list
+    * semantics. */
   def connectedComponents(
       pairs: DataFrame,
       aCol: String = "id_a",

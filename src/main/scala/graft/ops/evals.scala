@@ -578,7 +578,7 @@ object evals {
       loPpm: Long = 25000L,
       hiPpm: Long = 975000L): DataFrame =
     bootstrapImpl(df, Seq.empty, idCol, numCol, b, loPpm, hiPpm,
-      denCol, "ratio_q6")
+      denCol, "ratio_q6").drop("_wins")
 
   /** Stratified [[bootstrapRatioCI]] — one ratio band per group.
     * Returns `(groupKeys*, n_rows, b_reps, ratio_q6, lo_q6, hi_q6)`. */
@@ -599,6 +599,10 @@ object evals {
         :+ col("ratio_q6") :+ col("lo_q6") :+ col("hi_q6")): _*)
   }
 
+  /** The bootstrap core behind every [[bootstrapCI]]-family readout:
+    * `(groupKeys*, n_rows, <outName>, b_reps, lo_q6, hi_q6, _wins)`,
+    * where `_wins` counts the replicates whose mean is above 0 (read
+    * only by [[pairedBootstrap]]; column pruning drops it elsewhere). */
   private def bootstrapImpl(
       df: DataFrame,
       groupKeys: Seq[String],
@@ -608,11 +612,12 @@ object evals {
       loPpm: Long,
       hiPpm: Long,
       denCol: Column = lit(1L),
-      outName: String = "mean_q6"): DataFrame = {
+      outName: String = "mean_q6",
+      op: String = "bootstrapCI"): DataFrame = {
     require(b >= 2 && b <= 10000,
-      s"graft: bootstrapCI needs 2 <= b <= 10000, got $b")
+      s"graft: $op needs 2 <= b <= 10000, got $b")
     require(loPpm >= 0L && hiPpm <= 1000000L && loPpm < hiPpm,
-      s"graft: bootstrapCI needs 0 <= loPpm < hiPpm <= 1e6, got $loPpm, $hiPpm")
+      s"graft: $op needs 0 <= loPpm < hiPpm <= 1e6, got $loPpm, $hiPpm")
     import graft.functions.hashing
     val q6 = (c: Column) => graft.functions.vectors.quantize(c, 6)
     val gks = groupKeys.map(col)
@@ -669,7 +674,8 @@ object evals {
         max(when(col("_rn") ===
           least(col("_mm"), greatest(lit(1L),
             expr(s"(_mm * $hiPpm + 999999) DIV 1000000"))), col("_m")))
-          .as("hi_q6"))
+          .as("hi_q6"),
+        sum(when(col("_m") > 0.0, 1L).otherwise(0L)).as("_wins"))
     if (groupKeys.isEmpty) point.crossJoin(broadcast(band))
     else point.join(broadcast(band), groupKeys)
   }
@@ -695,55 +701,12 @@ object evals {
       bCol: Column,
       b: Int = 200,
       loPpm: Long = 25000L,
-      hiPpm: Long = 975000L): DataFrame = {
-    require(b >= 2 && b <= 10000,
-      s"graft: pairedBootstrap needs 2 <= b <= 10000, got $b")
-    require(loPpm >= 0L && hiPpm <= 1000000L && loPpm < hiPpm,
-      s"graft: pairedBootstrap needs 0 <= loPpm < hiPpm <= 1e6, got $loPpm, $hiPpm")
-    import graft.functions.hashing
-    val q6 = (c: Column) => graft.functions.vectors.quantize(c, 6)
-    val rows = df.select(
-        (aCol.cast("long") - bCol.cast("long")).as("_d"),
-        hashing.h32(concat(idCol.cast("string"), lit(":boot"))).as("_h"))
-      .where(col("_d").isNotNull && col("_h").isNotNull)
-    val point = rows.agg(count(lit(1)).as("n_rows"),
-      q6(sum(col("_d")).cast("double") / count(lit(1)).cast("double"))
-        .as("diff_q6"))
-    // ×b fan-out folded into one aggregate state (ReplicateFoldAgg,
-    // Poisson mode, denominator 1 → (Σw·d, Σw) per replicate) —
-    // identical sums, n-row scan stage instead of n·b.
-    val reps = rows
-      .agg(graft.functions.aggregates.bootFoldAgg(col("_h"), col("_d"),
-        lit(1L), b, PoissonCdfPpm).as("_bf"))
-      .select(posexplode(col("_bf")))
-      .select(col("pos").cast("long").as("_rep"),
-        col("col.a").as("_swd"), col("col.b").as("_sw"))
-      .where(col("_sw") > 0L)
-      .select(col("_rep"),
-        q6(col("_swd").cast("double") / col("_sw").cast("double")).as("_m"))
-    val wAll = windows.boundedGlobal("bootstrap-reps", col("_rep"))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val band = reps
-      .withColumn("_rn", row_number().over(
-        windows.boundedGlobal("bootstrap-reps", col("_rep"))
-          .orderBy(col("_m"), col("_rep"))))
-      .withColumn("_mm", count(lit(1)).over(wAll))
-      .agg(count(lit(1)).as("b_reps"),
-        max(when(col("_rn") ===
-          least(col("_mm"), greatest(lit(1L),
-            expr(s"(_mm * $loPpm) DIV 1000000") + 1L)), col("_m")))
-          .as("lo_q6"),
-        max(when(col("_rn") ===
-          least(col("_mm"), greatest(lit(1L),
-            expr(s"(_mm * $hiPpm + 999999) DIV 1000000"))), col("_m")))
-          .as("hi_q6"),
-        sum(when(col("_m") > 0.0, 1L).otherwise(0L)).as("_wins"))
-      .withColumn("win_ppm", expr("_wins * 1000000 DIV b_reps"))
-      .drop("_wins")
-    point.crossJoin(broadcast(band))
+      hiPpm: Long = 975000L): DataFrame =
+    bootstrapImpl(df, Seq.empty, idCol, aCol.cast("long") - bCol.cast("long"),
+      b, loPpm, hiPpm, lit(1L), "diff_q6", "pairedBootstrap")
       .select(col("n_rows"), col("b_reps"), col("diff_q6"),
-        col("lo_q6"), col("hi_q6"), col("win_ppm"))
-  }
+        col("lo_q6"), col("hi_q6"),
+        expr("_wins * 1000000 DIV b_reps").as("win_ppm"))
 
   /** COHEN's d standardized effect size (with Hedges' g small-sample
     * correction) — the "how big, in noise units" companion the

@@ -122,6 +122,9 @@ object quant {
   def pqAdcDot(codeCol: Column, codebooks: Seq[Seq[Seq[Double]]],
       q: Seq[Double]): Column = {
     val sub = codebooks.head.head.length
+    require(q.length == codebooks.length * sub,
+      s"graft: query dim ${q.length} does not match the PQ codebooks' dim " +
+        s"${codebooks.length * sub} (${codebooks.length} subspaces x $sub)")
     codebooks.zipWithIndex.map { case (cb, s) =>
       val qSub = q.slice(s * sub, (s + 1) * sub)
       val lut = array(cb.map(cw => lit(dotOf(qSub, cw))): _*)

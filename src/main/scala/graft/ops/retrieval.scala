@@ -172,7 +172,8 @@ object retrieval {
     val meta = spark.read.parquet(s"$path/meta").head()
     val buckets = meta.getAs[Int]("buckets")
     val add = writePostings(docs, path, textCol, idCol, buckets, SaveMode.Append)
-      .agg(count(lit(1)).as("n"), sum(col("dl")).as("s")).head()
+      .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("s"))
+      .head()
     // Crash ordering: postings land first, stats second. A crash between
     // the two leaves stats STALE (scores briefly use the old N/avgdl)
     // but never corrupt — df comes from the postings themselves, and the

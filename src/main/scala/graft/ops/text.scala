@@ -29,9 +29,6 @@ object text {
   def tokenCount(c: Column): Column =
     profileStats(c).getField("n_tokens").cast("int")
 
-  /** Compositional form of [[tokenCount]]. */
-  def tokenCountHof(c: Column): Column = size(tokens(c))
-
   /** BPE-ish subword segmentation via regex: runs of letters, runs of
     * digits, or a single non-alphanumeric symbol — the classic GPT-2-style
     * pre-tokenizer shape, minus the vocabulary merge step (which needs a
@@ -44,20 +41,11 @@ object text {
   def bpeTokenCount(c: Column): Column = size(bpeTokens(c))
 
   /** Mean token length in characters (0.0 for empty docs). One fused
-    * kernel pass; [[meanTokenLenHof]] is the executable-spec twin. */
+    * kernel pass; `HofTwins.meanTokenLenHof` is the test-side spec twin. */
   def meanTokenLen(c: Column): Column = {
     val s = profileStats(c)
     when(s.getField("n_tokens") > 0,
       s.getField("sum_tok_len").cast("double") / s.getField("n_tokens"))
-      .otherwise(lit(0.0))
-  }
-
-  /** Compositional form of [[meanTokenLen]] (HOF aggregate), used to
-    * cross-check the fused kernel. */
-  def meanTokenLenHof(c: Column): Column = {
-    val ts = tokens(c)
-    when(size(ts) > 0,
-      aggregate(ts, lit(0), (acc, t) => acc + length(t)).cast("double") / size(ts))
       .otherwise(lit(0.0))
   }
 
@@ -75,7 +63,7 @@ object text {
   val EsStop = Seq("el", "la", "de", "y", "es", "un", "en")
   val FrStop = Seq("le", "la", "de", "et", "est", "un", "dans")
 
-  private def hitCount(ts: Column, words: Seq[String]): Column =
+  private[graft] def hitCount(ts: Column, words: Seq[String]): Column =
     size(filter(ts, t => t.isin(words: _*)))
 
   /** The four language profiles, in the kernel's hits-array order. */
@@ -99,19 +87,11 @@ object text {
 
   /** Fraction of tokens that are (English) stopwords — a standard prose
     * signal: natural text has 0.2–0.5, keyword spam ~0. One fused kernel
-    * pass; [[stopwordRatioHof]] is the executable-spec twin. */
+    * pass; `HofTwins.stopwordRatioHof` is the test-side spec twin. */
   def stopwordRatio(c: Column): Column = {
     val s = profileStats(c)
     when(s.getField("n_tokens") > 0,
       element_at(s.getField("hits"), 1).cast("double") / s.getField("n_tokens"))
-      .otherwise(lit(0.0))
-  }
-
-  /** Compositional form of [[stopwordRatio]], used to cross-check the
-    * fused kernel. */
-  def stopwordRatioHof(c: Column): Column = {
-    val ts = tokens(c)
-    when(size(ts) > 0, hitCount(ts, EnStop).cast("double") / size(ts))
       .otherwise(lit(0.0))
   }
 
@@ -157,22 +137,6 @@ object text {
       .otherwise(lit("fr"))
   }
 
-  /** Compositional form of [[langId]] (per-language HOF filters), used to
-    * cross-check the fused kernel. */
-  def langIdHof(c: Column, minHits: Int = 1): Column = {
-    val ts = tokens(c)
-    val en = hitCount(ts, EnStop)
-    val de = hitCount(ts, DeStop)
-    val es = hitCount(ts, EsStop)
-    val fr = hitCount(ts, FrStop)
-    val top = greatest(en, de, es, fr)
-    when(top < minHits, lit("und"))
-      .when(en === top, lit("en"))
-      .when(de === top, lit("de"))
-      .when(es === top, lit("es"))
-      .otherwise(lit("fr"))
-  }
-
   // ---- char-n-gram language ID (Cavnar & Trenkle 1994) ----------------
 
   /** Per-language weighted n-gram scores over [[langprofiles.Default]]
@@ -203,19 +167,6 @@ object text {
       case (acc, (lang, i)) =>
         acc.when(element_at(scores, i + 1) === top, lit(lang))
     }.otherwise(lit(langs.last))
-  }
-
-  /** Compositional twin of [[langNgramScores]] (shingle array + one
-    * interpreted map-lookup aggregate per language), used to cross-check
-    * the fused kernel in NativeExprsSpec. */
-  def langNgramScoresHof(c: Column): Column = {
-    val norm = concat(lit(" "),
-      regexp_replace(lower(c), "[^\\p{L}]+", " "), lit(" "))
-    val sh = charShingles(norm, langprofiles.N)
-    array(langprofiles.Default.map { case (_, grams) =>
-      val m = typedLit(grams.toMap)
-      aggregate(sh, lit(0L), (acc, g) => acc + coalesce(element_at(m, g), lit(0L)))
-    }: _*)
   }
 
   /** Per-document language consistency under the TRIGRAM labeler — the
@@ -269,15 +220,10 @@ object text {
     * over all character 8-gram shingles (winnowing with one global window
     * — robust to small edits anywhere in the document, unlike `md5(text)`
     * which flips on a single byte). NULL for texts shorter than 8 chars.
-    * One fused kernel pass; [[minShingleFingerprintHof]] is the composed
-    * executable-spec twin (bit-identity in NativeExprsSpec). */
+    * One fused kernel pass; `HofTwins.minShingleFingerprintHof` is the
+    * composed test-side spec twin (bit-identity in NativeExprsSpec). */
   def minShingleFingerprint(c: Column, n: Int = 8): Column =
     graft.functions.NativeExprs.minShingleFp(c, n)
-
-  /** Compositional form of [[minShingleFingerprint]] — same semantics,
-    * used to cross-check the fused kernel. */
-  def minShingleFingerprintHof(c: Column, n: Int = 8): Column =
-    array_min(transform(charShingles(c, n), s => hashing.h32(s)))
 
   /** Exact 128-bit content fingerprint (hex md5). */
   def contentFingerprint(c: Column): Column = hashing.fingerprint128(c)
@@ -286,8 +232,8 @@ object text {
   // Per-document signals for filtering machine-generated or boilerplate
   // text out of a training corpus. All are fused per-row expressions —
   // zero shuffle; the n-gram counting runs as ONE native kernel pass per
-  // row (hashmap count, O(tokens)), with the HOF composition kept as the
-  // executable spec (NativeExprsSpec asserts bit-identity).
+  // row (hashmap count, O(tokens)), with the HOF composition in the test
+  // object `HofTwins` as the spec (NativeExprsSpec asserts bit-identity).
 
   /** Non-empty trimmed lines of a document. */
   def lines(c: Column): Column =
@@ -351,19 +297,6 @@ object text {
     * n-grams occurring more than once. Native single-pass kernel. */
   def repetitionMasses(c: Column, n: Int): Column =
     graft.functions.NativeExprs.repetitionMasses(c, n)
-
-  /** HOF executable spec of [[repetitionMasses]] (interpreted, O(G²)). */
-  def repetitionMassesHof(c: Column, n: Int): Column = {
-    val tg = ngramList(c, n)
-    val dg = array_distinct(tg)
-    val top = coalesce(array_max(transform(dg,
-      g => (size(filter(tg, x => x === g)) * length(g)).cast("long"))), lit(0L))
-    val dup = aggregate(dg, lit(0L), (acc, g) => {
-      val cnt = size(filter(tg, x => x === g))
-      acc + when(cnt > 1, (cnt * length(g)).cast("long")).otherwise(lit(0L))
-    })
-    struct(top.as("top_mass"), dup.as("dup_mass"))
-  }
 
   /** Fraction of document characters covered by the single most frequent
     * word n-gram (count × n-gram char length / doc char length) — the
@@ -439,26 +372,6 @@ object text {
     require(terms.nonEmpty && terms.forall(_.trim.nonEmpty),
       "graft: blocklistHits needs non-empty terms")
     graft.functions.NativeExprs.termSetHits(c, terms)
-  }
-
-  /** Compositional HOF twin of [[blocklistHits]] — the executable spec
-    * (pinned bit-equal in NativeExprsSpec): per distinct phrase length n,
-    * count positional n-grams that appear in that length's term list. */
-  def blocklistHitsHof(c: Column, terms: Seq[String]): Column = {
-    require(terms.nonEmpty, "graft: blocklistHitsHof needs terms")
-    val norm = terms.map(_.toLowerCase.trim.split("\\s+").toSeq)
-    val toks = tokens(c)
-    norm.groupBy(_.length).toSeq.sortBy(_._1).map { case (n, ts) =>
-      val lits = array(ts.map(t => lit(t.mkString(" "))): _*)
-      val grams = transform(
-        sequence(lit(1), size(toks) - (n - 1)),
-        i => concat_ws(" ", slice(toks, i, lit(n))))
-      // sequence(1, stop) DESCENDS when stop < 1 — guard the short-doc
-      // case explicitly instead of feeding it a backwards range
-      when(size(toks) >= n,
-          size(filter(grams, g => array_contains(lits, g))))
-        .otherwise(lit(0)).cast("long")
-    }.reduce(_ + _)
   }
 
   /** Keep only documents with ZERO blocklist hits — the gate form.

@@ -270,9 +270,8 @@ private[graft] object PipelineRegistry extends Registry {
     // into the whole card.
   b.q(
     "pipeline_anomaly_card" -> ((s, dir) => {
-      val grid = graft.ops.ckpt.cut(events(s, dir)
-        .select(expr("(unix_micros(ts) DIV 1000000) DIV 86400").as("bucket"))
-        .groupBy(col("bucket")).agg(count(lit(1)).as("x")))
+      val grid = graft.ops.ckpt.cut(
+        EventStream.bucketGrid(events(s, dir), 86400L, "ts"))
       val z = EventStream.robustZFrom(grid, kMilli = 1500L)
         .select(col("bucket"), col("x"), col("med"), col("mad"),
           col("dev"), col("flag").as("mad_flag"))

@@ -1007,13 +1007,51 @@ object EventStream {
       s"graft: cusum needs bucketSec/refN >= 1, slack >= 0, threshold >= 1")
     require(maxBuckets >= refN,
       s"graft: cusum needs maxBuckets >= refN, got $maxBuckets < $refN")
-    val grid = events
-      .select(expr(s"(unix_micros($tsCol) DIV 1000000) DIV $bucketSec")
-        .as("_b"))
-      .groupBy(col("_b")).agg(count(lit(1)).as("_x"))
-      .select(col("_b").as("bucket"), col("_x").as("x"))
-    cusumFrom(grid, refN, slack, threshold, maxBuckets)
+    cusumFrom(bucketGrid(events, bucketSec, tsCol), refN, slack, threshold,
+      maxBuckets)
   }
+
+  /** The batch event-time bucket grid every grid meter finishes from:
+    * `(bucket, x)` with `bucket = epoch_sec DIV bucketSec` and `x` the
+    * bucket's event count, in ONE map-side combined aggregate — the
+    * same rows a complete [[cusumStream]] snapshot holds. */
+  private[graft] def bucketGrid(
+      events: DataFrame, bucketSec: Long, tsCol: String): DataFrame =
+    events
+      .select(expr(s"(unix_micros($tsCol) DIV 1000000) DIV $bucketSec")
+        .as("bucket"))
+      .groupBy(col("bucket")).agg(count(lit(1)).as("x"))
+
+  /** Merge a `(bucket, x)` grid's duplicate bucket rows by addition (the
+    * merge-by-addition sink contract) into `(_b, _x)`; with a `ceiling`,
+    * a bucket count past it raises `op`'s int64-exactness error
+    * in-plan. */
+  private def mergedGrid(
+      grid: DataFrame, op: String, ceiling: Option[Long]): DataFrame = {
+    val merged = grid
+      .groupBy(col("bucket").as("_b")).agg(sum(col("x")).as("_x"))
+    ceiling.fold(merged)(c => merged.withColumn("_x",
+      when(col("_x") > c,
+        raise_error(format_string(
+          s"graft: $op int64-exactness ceiling exceeded (bucket count " +
+            s"%s > $c) — widen bucketSec", col("_x"))).cast("long"))
+        .otherwise(col("_x"))))
+  }
+
+  /** The bounded front of every fold-based grid meter: [[mergedGrid]],
+    * then ONE row holding the bucket-sorted `_a = array<(_b, _x)>`,
+    * raising `op`'s maxBuckets error in-plan past `maxBuckets` buckets. */
+  private def gridArray(
+      grid: DataFrame, op: String, ceiling: Option[Long],
+      maxBuckets: Int): DataFrame =
+    mergedGrid(grid, op, ceiling)
+      .agg(sort_array(collect_list(struct(col("_b"), col("_x")))).as("_a"))
+      .withColumn("_a",
+        when(size(col("_a")) > maxBuckets,
+          raise_error(format_string(
+            s"graft: $op bucket grid exceeds maxBuckets (%s > " +
+              s"$maxBuckets) — widen bucketSec", size(col("_a")))))
+        .otherwise(col("_a")))
 
   /** LIVE changepoint monitoring, the [[hllStream]]/[[histDriftStream]]
     * build/finish split applied to [[cusum]]: the stream side maintains
@@ -1085,11 +1123,7 @@ object EventStream {
       tsCol: String = "ts",
       maxBuckets: Int = 100000): DataFrame = {
     require(bucketSec >= 1, "graft: holtLinear needs bucketSec >= 1")
-    val grid = events
-      .select(expr(s"(unix_micros($tsCol) DIV 1000000) DIV $bucketSec")
-        .as("bucket"))
-      .groupBy(col("bucket")).agg(count(lit(1)).as("x"))
-    holtFrom(grid, aNum, bNum, maxBuckets)
+    holtFrom(bucketGrid(events, bucketSec, tsCol), aNum, bNum, maxBuckets)
   }
 
   /** [[holtLinear]]'s int64-exactness ceiling on one bucket's count:
@@ -1110,50 +1144,12 @@ object EventStream {
       s"graft: holtFrom needs 1 <= aNum <= 1024, 0 <= bNum <= 1024, " +
         s"got $aNum, $bNum")
     require(maxBuckets >= 1, "graft: holtFrom needs maxBuckets >= 1")
-    val merged = grid
-      .groupBy(col("bucket").as("_b")).agg(sum(col("x")).as("_x"))
-      .withColumn("_x",
-        when(col("_x") > HoltMaxX,
-          raise_error(format_string(
-            "graft: holt int64-exactness ceiling exceeded (bucket count " +
-              s"%s > $HoltMaxX) — widen bucketSec", col("_x"))).cast("long"))
-          .otherwise(col("_x")))
-    val arr = merged
-      .agg(sort_array(collect_list(struct(col("_b"), col("_x")))).as("_a"))
-      .withColumn("_a",
-        when(size(col("_a")) > maxBuckets,
-          raise_error(format_string(
-            "graft: holt bucket grid exceeds maxBuckets (%s > " +
-              s"$maxBuckets) — widen bucketSec", size(col("_a")))))
-        .otherwise(col("_a")))
-    val fold = aggregate(col("_a"),
-      struct(
-        array().cast("array<struct<l:bigint,t:bigint,f:bigint>>").as("out"),
-        lit(0L).as("l"), lit(0L).as("t")),
-      (st, e) => {
-        val first = size(st.getField("out")) === 0
-        val f = st.getField("l") + st.getField("t")
-        val xs = e.getField("_x") * 1024L
-        val l2 = when(first, xs).otherwise(
-          shiftright(lit(aNum.toLong) * xs + lit(1024L - aNum) * f, 10))
-        val t2 = when(first, lit(0L)).otherwise(
-          shiftright(lit(bNum.toLong) * (l2 - st.getField("l"))
-            + lit(1024L - bNum) * st.getField("t"), 10))
-        val fRec = when(first, lit(null).cast("long")).otherwise(f)
-        struct(
-          concat(st.getField("out"),
-            array(struct(l2.as("l"), t2.as("t"), fRec.as("f")))).as("out"),
-          l2.as("l"), t2.as("t"))
-      })
-    arr.withColumn("_s", fold.getField("out"))
-      .select(col("_s"), posexplode(col("_a")).as(Seq("_i", "_e")))
-      .withColumn("_r", element_at(col("_s"), col("_i") + 1))
-      .select(col("_e._b").as("bucket"), col("_e._x").as("x"),
-        col("_r.l").as("level_fp"), col("_r.t").as("trend_fp"),
-        col("_r.f").as("forecast_fp"),
-        (col("_e._x") * 1024L - col("_r.f")).as("err_fp"),
-        graft.functions.vectors.quantize(
-          col("_r.f").cast("double") / 1024.0, 2).as("forecast_q2"))
+    // Holt linear IS the Holt-Winters fold with gNum = 0: the seasonal
+    // update `(0·(x−l') + 1024·0) >> 10` keeps a one-slot ring at 0, and
+    // with `s_prev = 0` the level, trend and forecast terms reduce to
+    // Holt's term by term
+    hwFit(gridArray(grid, "holt", Some(HoltMaxX), maxBuckets), 1, aNum, bNum,
+      0).drop("season_fp")
   }
 
   /** Holt-WINTERS additive (triple-exponential) smoothing — [[holtLinear]]
@@ -1190,11 +1186,8 @@ object EventStream {
       tsCol: String = "ts",
       maxBuckets: Int = 100000): DataFrame = {
     require(bucketSec >= 1, "graft: holtWinters needs bucketSec >= 1")
-    val grid = events
-      .select(expr(s"(unix_micros($tsCol) DIV 1000000) DIV $bucketSec")
-        .as("bucket"))
-      .groupBy(col("bucket")).agg(count(lit(1)).as("x"))
-    holtWintersFrom(grid, period, aNum, bNum, gNum, maxBuckets)
+    holtWintersFrom(bucketGrid(events, bucketSec, tsCol), period, aNum, bNum,
+      gNum, maxBuckets)
   }
 
   /** Shared argument validation for the Holt-Winters family. */
@@ -1209,25 +1202,6 @@ object EventStream {
         s"0 <= gNum <= 1024, got $aNum, $bNum, $gNum")
     require(maxBuckets >= 1, s"graft: $op needs maxBuckets >= 1")
   }
-
-  /** Merge-by-addition + both in-plan ceilings + the sorted grid array
-    * — the shared front half of every Holt-Winters entry point. */
-  private def hwGridArray(grid: DataFrame, maxBuckets: Int): DataFrame =
-    grid
-      .groupBy(col("bucket").as("_b")).agg(sum(col("x")).as("_x"))
-      .withColumn("_x",
-        when(col("_x") > HoltMaxX,
-          raise_error(format_string(
-            "graft: holtWinters int64-exactness ceiling exceeded (bucket " +
-              s"count %s > $HoltMaxX) — widen bucketSec", col("_x"))).cast("long"))
-          .otherwise(col("_x")))
-      .agg(sort_array(collect_list(struct(col("_b"), col("_x")))).as("_a"))
-      .withColumn("_a",
-        when(size(col("_a")) > maxBuckets,
-          raise_error(format_string(
-            "graft: holtWinters bucket grid exceeds maxBuckets (%s > " +
-              s"$maxBuckets) — widen bucketSec", size(col("_a")))))
-        .otherwise(col("_a")))
 
   /** ONE recurrence step `(l', t', s')` of the exact q10 Holt-Winters
     * update — the single definition both the fitting fold and the
@@ -1257,7 +1231,18 @@ object EventStream {
       gNum: Int = 205,
       maxBuckets: Int = 100000): DataFrame = {
     requireHwArgs("holtWintersFrom", period, aNum, bNum, gNum, maxBuckets)
-    val arr = hwGridArray(grid, maxBuckets)
+    hwFit(gridArray(grid, "holtWinters", Some(HoltMaxX), maxBuckets), period,
+      aNum, bNum, gNum)
+  }
+
+  /** The exact q10 Holt-Winters fit over a [[gridArray]] row: ONE
+    * bounded HOF fold carrying `(l, t, ring[period])` through [[hwStep]]
+    * and the per-bucket `(l, t, s, f)` output array, posexploded back to
+    * `(bucket, x, level_fp, trend_fp, season_fp, forecast_fp, err_fp,
+    * forecast_q2)`; forecast/err null on the first bucket. */
+  private def hwFit(
+      arr: DataFrame, period: Int, aNum: Int, bNum: Int,
+      gNum: Int): DataFrame = {
     val ring0 = array_repeat(lit(0L), period)
     val fold = aggregate(col("_a"),
       struct(
@@ -1312,11 +1297,8 @@ object EventStream {
       tsCol: String = "ts",
       maxBuckets: Int = 100000): DataFrame = {
     require(bucketSec >= 1, "graft: holtWintersForecast needs bucketSec >= 1")
-    holtWintersForecastFrom(events
-      .select(expr(s"(unix_micros($tsCol) DIV 1000000) DIV $bucketSec")
-        .as("bucket"))
-      .groupBy(col("bucket")).agg(count(lit(1)).as("x")),
-      period, horizon, aNum, bNum, gNum, maxBuckets)
+    holtWintersForecastFrom(bucketGrid(events, bucketSec, tsCol), period,
+      horizon, aNum, bNum, gNum, maxBuckets)
   }
 
   /** FINISH form of [[holtWintersForecast]] over any `(bucket, x)` grid
@@ -1334,7 +1316,7 @@ object EventStream {
       s"graft: holtWintersForecast needs 1 <= horizon <= 100000, got $horizon")
     requireHwArgs("holtWintersForecastFrom", period, aNum, bNum, gNum,
       maxBuckets)
-    val arr = hwGridArray(grid, maxBuckets)
+    val arr = gridArray(grid, "holtWinters", Some(HoltMaxX), maxBuckets)
     val ring0 = array_repeat(lit(0L), period)
     // the SAME hwStep recurrence as the fitting fold, but only the
     // FINAL state is kept — the fold carries no output array
@@ -1381,16 +1363,7 @@ object EventStream {
       s"graft: cusumFrom needs refN >= 1, slack >= 0, threshold >= 1")
     require(maxBuckets >= refN,
       s"graft: cusumFrom needs maxBuckets >= refN, got $maxBuckets < $refN")
-    val merged = grid
-      .groupBy(col("bucket").as("_b")).agg(sum(col("x")).as("_x"))
-    val arr = merged
-      .agg(sort_array(collect_list(struct(col("_b"), col("_x")))).as("_a"))
-      .withColumn("_a",
-        when(size(col("_a")) > maxBuckets,
-          raise_error(format_string(
-            "graft: cusum bucket grid exceeds maxBuckets (%s > " +
-              s"$maxBuckets) — widen bucketSec", size(col("_a")))))
-        .otherwise(col("_a")))
+    val arr = gridArray(grid, "cusum", None, maxBuckets)
     // baseline from the first refN buckets (fewer buckets than refN ->
     // whatever exists; n_ref rides the scaling so the math stays exact)
     val ref = struct(
@@ -1562,11 +1535,7 @@ object EventStream {
       tsCol: String = "ts",
       maxBuckets: Int = 100000): DataFrame = {
     require(bucketSec >= 1, "graft: decompose needs bucketSec >= 1")
-    decomposeFrom(events
-      .select(expr(s"(unix_micros($tsCol) DIV 1000000) DIV $bucketSec")
-        .as("bucket"))
-      .groupBy(col("bucket")).agg(count(lit(1)).as("x")),
-      period, maxBuckets)
+    decomposeFrom(bucketGrid(events, bucketSec, tsCol), period, maxBuckets)
   }
 
   /** FINISH form of [[decompose]] over any `(bucket, x)` grid —
@@ -1580,15 +1549,7 @@ object EventStream {
       s"graft: decompose needs 2 <= period <= 10000, got $period")
     require(maxBuckets >= 1, "graft: decompose needs maxBuckets >= 1")
     val h = period / 2
-    val grid2 = grid
-      .groupBy(col("bucket").as("_b")).agg(sum(col("x")).as("_x"))
-      .withColumn("_x",
-        when(col("_x") > DecomposeMaxX,
-          raise_error(format_string(
-            "graft: decompose int64-exactness ceiling exceeded (bucket " +
-              s"count %s > $DecomposeMaxX) — widen bucketSec",
-            col("_x"))).cast("long"))
-          .otherwise(col("_x")))
+    val grid2 = mergedGrid(grid, "decompose", Some(DecomposeMaxX))
     val bg = graft.ops.windows.boundedGlobal("bucket-grid", col("_b"))
     val wCnt = bg.rowsBetween(Window.unboundedPreceding,
       Window.unboundedFollowing)
@@ -1651,11 +1612,7 @@ object EventStream {
       tsCol: String = "ts",
       maxBuckets: Int = 100000): DataFrame = {
     require(bucketSec >= 1, "graft: robustZ needs bucketSec >= 1")
-    robustZFrom(events
-      .select(expr(s"(unix_micros($tsCol) DIV 1000000) DIV $bucketSec")
-        .as("bucket"))
-      .groupBy(col("bucket")).agg(count(lit(1)).as("x")),
-      kMilli, maxBuckets)
+    robustZFrom(bucketGrid(events, bucketSec, tsCol), kMilli, maxBuckets)
   }
 
   /** FINISH form of [[robustZ]] over any `(bucket, x)` grid — the
@@ -1666,8 +1623,8 @@ object EventStream {
       maxBuckets: Int = 100000): DataFrame = {
     require(kMilli >= 0, s"graft: robustZ needs kMilli >= 0, got $kMilli")
     require(maxBuckets >= 1, "graft: robustZ needs maxBuckets >= 1")
-    val grid = grid0
-      .groupBy(col("bucket")).agg(sum(col("x")).as("x"))
+    val grid = mergedGrid(grid0, "robustZ", None)
+      .select(col("_b").as("bucket"), col("_x").as("x"))
     val bg = graft.ops.windows.boundedGlobal("bucket-grid", col("bucket"))
     val wCnt = bg.rowsBetween(Window.unboundedPreceding,
       Window.unboundedFollowing)

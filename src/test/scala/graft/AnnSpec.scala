@@ -26,7 +26,7 @@ class AnnSpec extends SparkSpec {
   test("fused lsh signature kernel equals the per-bit composed form") {
     val diff = df.select(
         ann.lshSignature(col("embedding"), t = 1, nbits = 12, dim = dim).as("a"),
-        ann.lshSignatureHof(col("embedding"), t = 1, nbits = 12, dim = dim).as("b"))
+        HofTwins.lshSignatureHof(col("embedding"), t = 1, nbits = 12, dim = dim).as("b"))
       .where(col("a") =!= col("b")).count()
     assert(diff == 0)
   }

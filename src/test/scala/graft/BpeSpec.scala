@@ -43,7 +43,7 @@ class BpeSpec extends SparkSpec {
     for ((l, r) <- Seq(("e", " "), (" ", "t"), ("t", "h"))) {
       val diff = syms.select(
           NativeExprs.bpeMergePair(col("syms"), l, r).as("a"),
-          bpe.mergePairHof(col("syms"), l, r).as("b"))
+          HofTwins.mergePairHof(col("syms"), l, r).as("b"))
         .where(col("a") =!= col("b")).count()
       assert(diff == 0, s"pair ($l,$r)")
     }
@@ -78,7 +78,7 @@ class BpeSpec extends SparkSpec {
     // and the interpreted HOF twin agrees bit-for-bit
     val hofDiff = sample.select(
         bpe.encodeTokens(col("text"), rules).as("a"),
-        bpe.encodeHof(col("text"), rules).as("b"))
+        HofTwins.encodeHof(col("text"), rules).as("b"))
       .where(col("a") =!= col("b")).count()
     assert(hofDiff == 0)
   }

@@ -631,7 +631,7 @@ class DedupSpec extends SparkSpec {
     val real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val diff = real.select(
         dedup.winnowFingerprints(col("text"), 4, 4).as("a"),
-        dedup.winnowFingerprintsHof(col("text"), 4, 4).as("b"))
+        HofTwins.winnowFingerprintsHof(col("text"), 4, 4).as("b"))
       .where(col("a") =!= col("b")).count()
     assert(diff == 0, "winnow kernel diverged from HOF twin")
   }

@@ -217,6 +217,26 @@ class EventMetersSpec extends SparkSpec {
       e.getMessage)
   }
 
+  test("every grid meter's maxBuckets guard raises with its own op name") {
+    // six daily buckets against a three-bucket ceiling
+    val six = ev((1 to 6).map(d => (d.toLong, ts(d), 1L, "e", 1.0)): _*)
+    val day = 86400L
+    Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "holt" -> (() => EventStream.holtLinear(six, day, maxBuckets = 3)),
+      "holtWinters" -> (() =>
+        EventStream.holtWinters(six, day, period = 2, maxBuckets = 3)),
+      "holtWinters" -> (() =>
+        EventStream.holtWintersForecast(six, day, period = 2, maxBuckets = 3)),
+      "cusum" -> (() => EventStream.cusum(six, day, refN = 1, maxBuckets = 3)),
+      "robustZ" -> (() => EventStream.robustZ(six, day, maxBuckets = 3))
+    ).foreach { case (op, meter) =>
+      val e = intercept[Exception](meter().collect())
+      assert(e.getMessage.contains(
+        s"graft: $op bucket grid exceeds maxBuckets (6 > 3) — widen bucketSec"),
+        s"$op: ${e.getMessage}")
+    }
+  }
+
   test("robustZ: lower-median/MAD hand fixtures; degenerate MAD flags any deviation") {
     def burst(day: Int, n: Int) = (1 to n).map(i =>
       (day * 100L + i, ts(day), i.toLong, "e", 1.0))

@@ -224,7 +224,7 @@ object GraftProperties extends Properties("graft") {
             (texts.map(_.getBytes("UTF-8")) ++ raws).map(Some(_)))
           .toDF("raw").select(col("raw").cast("string").as("t"))
         Seq(1, 2, 3, 8).forall { n =>
-          df.where(!(dedup.wordShingles(col("t"), n) <=> dedup.wordShinglesHof(col("t"), n)))
+          df.where(!(dedup.wordShingles(col("t"), n) <=> HofTwins.wordShinglesHof(col("t"), n)))
             .count() == 0
         }
     }

@@ -31,7 +31,7 @@ class MetricExtensionsSpec extends SparkSpec {
     val q = vectors.vecLit((0 until 64).map(i => math.cos(i * 0.3)))
     val diff = emb.select(
         vectors.l1Distance(col("embedding"), q).as("a"),
-        vectors.l1DistanceHof(col("embedding"), q).as("b"))
+        HofTwins.l1DistanceHof(col("embedding"), q).as("b"))
       .where(col("a") =!= col("b")).count()
     assert(diff == 0)
   }

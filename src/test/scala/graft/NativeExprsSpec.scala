@@ -20,7 +20,7 @@ class NativeExprsSpec extends SparkSpec {
   test("native min-shingle fingerprint equals the HOF composition; null under n chars") {
     val diff = docs.select(
         graft.ops.text.minShingleFingerprint(col("text")).as("a"),
-        graft.ops.text.minShingleFingerprintHof(col("text")).as("b"))
+        HofTwins.minShingleFingerprintHof(col("text")).as("b"))
       .where(col("a") =!= col("b") ||
         (col("a").isNull =!= col("b").isNull)).count()
     assert(diff == 0)
@@ -34,7 +34,7 @@ class NativeExprsSpec extends SparkSpec {
     val uni = Seq("héllo wörld déjà vu encore", "plain ascii text here")
       .toDF("text")
       .select(graft.ops.text.minShingleFingerprint(col("text")).as("a"),
-        graft.ops.text.minShingleFingerprintHof(col("text")).as("b"))
+        HofTwins.minShingleFingerprintHof(col("text")).as("b"))
       .where(col("a") =!= col("b")).count()
     assert(uni == 0)
   }
@@ -42,10 +42,10 @@ class NativeExprsSpec extends SparkSpec {
   test("fused text profile: langId/stopwordRatio/meanTokenLen equal their HOF twins") {
     import graft.ops.text
     val diff = docs.select(
-        text.langId(col("text")).as("a1"), text.langIdHof(col("text")).as("b1"),
-        text.stopwordRatio(col("text")).as("a2"), text.stopwordRatioHof(col("text")).as("b2"),
-        text.meanTokenLen(col("text")).as("a3"), text.meanTokenLenHof(col("text")).as("b3"),
-        text.tokenCount(col("text")).as("a4"), text.tokenCountHof(col("text")).as("b4"))
+        text.langId(col("text")).as("a1"), HofTwins.langIdHof(col("text")).as("b1"),
+        text.stopwordRatio(col("text")).as("a2"), HofTwins.stopwordRatioHof(col("text")).as("b2"),
+        text.meanTokenLen(col("text")).as("a3"), HofTwins.meanTokenLenHof(col("text")).as("b3"),
+        text.tokenCount(col("text")).as("a4"), HofTwins.tokenCountHof(col("text")).as("b4"))
       .where(col("a1") =!= col("b1") || col("a2") =!= col("b2") ||
         col("a3") =!= col("b3") || col("a4") =!= col("b4"))
       .count()
@@ -63,13 +63,13 @@ class NativeExprsSpec extends SparkSpec {
     import spark.implicits._
     val diff = fixtures.toDF("text").select(
         text.langNgramScores(col("text")).as("a"),
-        text.langNgramScoresHof(col("text")).as("b"))
+        HofTwins.langNgramScoresHof(col("text")).as("b"))
       .where(col("a") =!= col("b")).count()
     assert(diff == 0)
     // and over the real corpus
     val corpus = docs.select(
         text.langNgramScores(col("text")).as("a"),
-        text.langNgramScoresHof(col("text")).as("b"))
+        HofTwins.langNgramScoresHof(col("text")).as("b"))
       .where(col("a") =!= col("b")).count()
     assert(corpus == 0)
   }
@@ -77,14 +77,14 @@ class NativeExprsSpec extends SparkSpec {
   test("native wordShingles equals the HOF composition on real text") {
     val diff = docs.select(
         dedup.wordShingles(col("text")).as("a"),
-        dedup.wordShinglesHof(col("text")).as("b"))
+        HofTwins.wordShinglesHof(col("text")).as("b"))
       .where(col("a") =!= col("b")).count()
     assert(diff == 0)
     // edge cases: short text, repeated whitespace, case folding
     import spark.implicits._
     val edge = Seq("", "a b", "A  B\tC  a b c", "x y z").toDF("text")
     val rows = edge.select(dedup.wordShingles(col("text")).as("a"),
-      dedup.wordShinglesHof(col("text")).as("b")).collect()
+      HofTwins.wordShinglesHof(col("text")).as("b")).collect()
     rows.foreach(r => assert(r.getSeq[String](0) == r.getSeq[String](1)))
   }
 
@@ -133,7 +133,7 @@ class NativeExprsSpec extends SparkSpec {
   test("native simhash equals the explode+groupBy composition") {
     val a = dedup.simhash(docs, "text", "doc_id").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val b = dedup.simhashHof(docs, "text", "doc_id").collect()
+    val b = HofTwins.simhashHof(docs, "text", "doc_id").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(a == b)
   }
@@ -141,7 +141,7 @@ class NativeExprsSpec extends SparkSpec {
   test("native 64-bit simhash equals the HOF composition; low 32 bits = 32-bit simhash") {
     val a = dedup.simhash(docs, "text", "doc_id", bits = 64).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val b = dedup.simhashHof(docs, "text", "doc_id", bits = 64).collect()
+    val b = HofTwins.simhashHof(docs, "text", "doc_id", bits = 64).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(a == b)
     val s32 = dedup.simhash(docs, "text", "doc_id", bits = 32).collect()
@@ -165,9 +165,9 @@ class NativeExprsSpec extends SparkSpec {
     val q = vectors.vecLit((0 until 64).map(i => math.sin(i * 0.7)))
     val diff = emb.select(
         vectors.dotProduct(col("embedding"), q).as("dn"),
-        vectors.dotProductHof(col("embedding"), q).as("dh"),
+        HofTwins.dotProductHof(col("embedding"), q).as("dh"),
         vectors.l2Squared(col("embedding"), q).as("ln"),
-        vectors.l2SquaredHof(col("embedding"), q).as("lh"))
+        HofTwins.l2SquaredHof(col("embedding"), q).as("lh"))
       .where(col("dn") =!= col("dh") || col("ln") =!= col("lh")).count()
     assert(diff == 0)
     // Hamming over sign signatures: kernel == HOF fold, and integral
@@ -175,7 +175,7 @@ class NativeExprsSpec extends SparkSpec {
     val qs = vectors.vecLit((0 until 64).map(i => if (math.sin(i * 0.7) >= 0) 1.0 else 0.0))
     val hdiff = emb.select(
         vectors.hammingDistance(sig, qs).as("hn"),
-        vectors.hammingDistanceHof(sig, qs).as("hh"))
+        HofTwins.hammingDistanceHof(sig, qs).as("hh"))
       .where(col("hn") =!= col("hh") || col("hn") =!= floor(col("hn"))).count()
     assert(hdiff == 0)
     // packed law: XOR+popcount over 63-bit sign words == unpacked
@@ -196,7 +196,7 @@ class NativeExprsSpec extends SparkSpec {
     for (n <- Seq(2, 3)) {
       val diff = docs.select(
           text.repetitionMasses(col("text"), n).as("a"),
-          text.repetitionMassesHof(col("text"), n).as("b"))
+          HofTwins.repetitionMassesHof(col("text"), n).as("b"))
         .where(col("a") =!= col("b")).count()
       assert(diff == 0, s"n=$n")
     }
@@ -205,7 +205,7 @@ class NativeExprsSpec extends SparkSpec {
     val edge = Seq("", "a", "a b a b a b", "x x x x").toDF("text")
     val rows = edge.select(
       text.repetitionMasses(col("text"), 2).as("a"),
-      text.repetitionMassesHof(col("text"), 2).as("b")).collect()
+      HofTwins.repetitionMassesHof(col("text"), 2).as("b")).collect()
     rows.foreach(r => assert(r.getStruct(0) == r.getStruct(1)))
   }
 
@@ -215,7 +215,7 @@ class NativeExprsSpec extends SparkSpec {
       .withColumn("hs", transform(col("g"), x => hashing.h32(x)))
     val diff = grams.select(
         NativeExprs.minhashSig(col("g"), 16).as("a"),
-        dedup.minhashSignatureHof(col("hs"), 16).as("b"))
+        HofTwins.minhashSignatureHof(col("hs"), 16).as("b"))
       .where(col("a") =!= col("b")).count()
     assert(diff == 0)
   }
@@ -290,7 +290,7 @@ class NativeExprsSpec extends SparkSpec {
     import spark.implicits._
     val a = decontam.bloomClean(docs, bloomDf, "text")
       .select("doc_id").as[Long].collect().toSet
-    val b = decontam.bloomCleanHof(docs, bloomDf, "text")
+    val b = HofTwins.bloomCleanHof(docs, bloomDf, "text")
       .select("doc_id").as[Long].collect().toSet
     assert(a == b)
     assert(a.size < docs.count(), "fixture must actually drop contaminated docs")
@@ -324,7 +324,7 @@ class NativeExprsSpec extends SparkSpec {
     val terms = Seq("slow", "big query", "merge batch part", "ZZZ absent")
     val diff = docs.select(
         graft.ops.text.blocklistHits(col("text"), terms).as("a"),
-        graft.ops.text.blocklistHitsHof(col("text"), terms).as("b"))
+        HofTwins.blocklistHitsHof(col("text"), terms).as("b"))
       .where(col("a") =!= col("b")).count()
     assert(diff == 0, "blocklist kernel diverged from HOF twin")
     // and the corpus actually exercises every phrase length

@@ -81,6 +81,28 @@ class QuantSpec extends SparkSpec {
     }
   }
 
+  test("a wrong-dimension PQ query raises on every PQ scoring path") {
+    val cbs = quant.pqSeedCodebooks(emb, m = 4, k = 8)
+    val dir = java.nio.file.Files.createTempDirectory("graft-pqdim-").toString + "/idx"
+    val (idx, _) = graft.index.VecIndex.build(emb, dir,
+      opts = graft.index.VecIndex.BuildOptions(
+        ivfCentroids = Some(graft.ops.ann.seedCentroids(emb, 4)),
+        pqCodebooks = Some(cbs)))
+    // a short query would score prefix dots, a long one drop its tail
+    Seq(63, 65).foreach { d =>
+      val q = (0 until d).map(i => math.sin(i + 1.0))
+      val msg = s"query dim $d does not match the PQ codebooks' dim 64"
+      Seq[() => Any](
+        () => quant.pqAdcDot(col("pq_code"), cbs, q),
+        () => quant.pqSearchDot(emb, cbs, q, k = 5).collect(),
+        () => graft.ops.ann.ivfPqSearch(idx, q, k = 5, nprobe = 2).collect()
+      ).foreach { run =>
+        val e = intercept[IllegalArgumentException](run())
+        assert(e.getMessage.contains(msg), e.getMessage)
+      }
+    }
+  }
+
   test("pq top-k is a sane candidate pool for exact rerank") {
     val q = (0 until 64).map(i => math.sin(i + 1.0))
     val cbs = quant.pqSeedCodebooks(emb, m = 4, k = 16)

@@ -77,6 +77,19 @@ class RetrievalSpec extends SparkSpec {
     assert(a.map(_._1).contains(4L), "appended doc must be searchable")
   }
 
+  test("appendTextIndex: an empty batch leaves the stats and BM25 results unchanged") {
+    val path = java.nio.file.Files.createTempDirectory("graft-ti-empty-").toString + "/idx"
+    retrieval.buildTextIndex(docs, path, "text", "doc_id", buckets = 8)
+    def stats() = spark.read.parquet(s"$path/meta")
+      .select("n_docs", "sum_dl", "buckets").as[(Long, Long, Int)].head()
+    def top() = retrieval.bm25Indexed(spark, path, Seq("spark", "query"), k = 10)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val (statsBefore, topBefore) = (stats(), top())
+    retrieval.appendTextIndex(docs.limit(0), path, "text", "doc_id")
+    assert(stats() == statsBefore)
+    assert(top() == topBefore)
+  }
+
   test("mmr: rank 1 is pure relevance; diversity-weighted rank 2 skips the near-dup") {
     val df = Seq(
       (1L, Array(1.0, 0.049)),  // top relevance

@@ -363,6 +363,29 @@ class VecIndexSpec extends SparkSpec {
     assert(VecIndex.append(mk(40 until 50, 8), rp)._1.df.count() == 10)
   }
 
+  test("deleting every row of a partitioned index leaves a loadable empty index") {
+    val dim = 8
+    val mk = (r: Range) => r
+      .map(i => (i.toLong, (0 until dim).map(d => math.sin(i * 7.0 + d)).toArray, i % 2))
+      .toDF("vec_id", "embedding", "label")
+    val cents = (0 until 2).map(c =>
+      (c, (0 until dim).map(d => math.cos(c * 5.0 + d)): Seq[Double]))
+    Seq(
+      "lsh" -> VecIndex.BuildOptions(lshBits = Some(1)),
+      "ivf" -> VecIndex.BuildOptions(ivfCentroids = Some(cents))
+    ).foreach { case (name, opts) =>
+      val path = s"$tmp/emptied_$name"
+      VecIndex.build(mk(0 until 20), path, opts = opts)
+      assert(VecIndex.delete(spark, path, lit(true)).rowsDeleted == 20, name)
+      assert(spark.read.parquet(path).count() == 0, name)
+      assert(VecIndex.load(spark, path).df.count() == 0, name)
+      val (store, st) = VecIndex.append(mk(20 until 30), path)
+      assert(st.rows == 10 && store.df.count() == 10, name)
+      assert(VecIndex.load(spark, path).df.select("vec_id").as[Long].collect()
+        .sorted.toSeq == (20L until 30L), name)
+    }
+  }
+
   test("z-order clustering: range filters on EITHER dimension prune row groups") {
     import graft.index.{zorder, PruneStats}
     // two independent uniform dims: a plain single-column sort would
